@@ -8,6 +8,7 @@ catalog with Spark temp views over columnar parquet. Schema presence checks
 
 from __future__ import annotations
 
+import math
 import os
 from contextlib import contextmanager
 
@@ -116,53 +117,55 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# spread_input sizing: bytes of (compressed, plan-estimated) input per
-# spread task. VERDICT r11 item 5: unconditionally repartitioning tiny
-# inputs to defaultParallelism made several sf0.1 queries FASTER ON 8
-# CORES THAN 32 (scaling ratios 0.52-0.70) -- 32-way scheduling of a
-# ~600 KB input costs more than it buys. The width is therefore capped by
-# the optimizer's size estimate: ceil(bytes / target). 64 KiB/task is
-# sized for the expression-heavy per-row pipelines this helper feeds
-# (winnowing folds, shingling, JSON parsing -- ~0.1-1 ms/row on ~100 B
-# compressed rows), parameterised for other deployments. On production
-# multi-split inputs the partition-count guard makes the whole helper a
-# no-op regardless of this constant.
-_SPREAD_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TARGET_BYTES", str(64 << 10))
-)
+# spread_input hint for compute-bound per-row folds (k-means assignment at
+# ~4 ms/row, IVF argmax, simhash votes, shingle n-gram folds, cosine and
+# triangle scoring): about one plan row per task, so any input of a few
+# hundred rows or more reaches the session width.
+FOLD_BYTES_PER_TASK = 256
 
 
-def spread_input(df: DataFrame, width: int | None = None) -> DataFrame:
-    """Round-robin a narrow input across the session's width WHEN the scan
-    itself cannot parallelize (guide section 2.5 "input skew: one huge
-    unsplittable file -- repartition immediately after the read").
+def spread_need(df: DataFrame, bytes_per_task: float) -> int | None:
+    """Tasks needed to give each about ``bytes_per_task`` of the plan's
+    estimated size (ceil), or None when the optimizer has no estimate."""
+    try:
+        # py4j surfaces scala.math.BigInt as a Java object or a plain
+        # Python int depending on magnitude; str() handles both
+        est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except Exception:
+        return None
+    return max(1, math.ceil(est / bytes_per_task))
 
-    The driver fixtures are single-row-group parquet files, so every scan
-    is one task and per-row-heavy expression pipelines (winnowing folds,
-    JSON parsing) run single-threaded. The repartition is CONDITIONAL on
-    the scan's actual partition count: on production multi-split inputs
-    (or the bench's SPARK_GRAFT_BENCH_FILES=N layout) it is a no-op, so
-    this never adds a full-corpus shuffle at scale. The width is capped
-    by the plan's size estimate (r12, see _SPREAD_TARGET_BYTES) so tiny
-    inputs stop paying full-session-width scheduling. Select the needed
-    columns BEFORE calling -- only they cross the exchange."""
-    target = width or df.sparkSession.sparkContext.defaultParallelism
-    if width is None:
-        try:
-            # py4j surfaces scala.math.BigInt as a Java object or a plain
-            # Python int depending on magnitude; str() handles both
-            est = int(
-                str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            )
-        except Exception:
-            est = -1
-        if est >= 0:
-            # unknown-size plans (LogicalRDD etc.) report Long.Max-ish
-            # estimates; min() against the session width bounds them
-            target = min(target, max(1, -(-est // _SPREAD_TARGET_BYTES)))
-    if df.rdd.getNumPartitions() >= target:
+
+def spread_input(df: DataFrame, bytes_per_task: float = 64 << 10) -> DataFrame:
+    """Round-robin a narrow input across the session (guide section 2.5
+    "input skew: one huge unsplittable file -- repartition immediately
+    after the read"). This is the one place a stage width is chosen:
+
+        width = min(session width, ceil(plan bytes / bytes_per_task))
+
+    where plan bytes is the optimizer's ``sizeInBytes`` estimate for ``df``
+    (the session width when there is none; unknown-size plans such as
+    LogicalRDD report Long.Max-ish estimates, which the min bounds). The
+    input is repartitioned only when it has fewer partitions than that
+    width, so on multi-split inputs (production, or the bench's
+    SPARK_GRAFT_BENCH_FILES=N layout) this is a no-op and never adds a
+    full-corpus shuffle.
+
+    ``bytes_per_task`` (plan bytes of input per task) is how a caller
+    states its per-row cost, in bytes because plan statistics carry bytes
+    and no row count. The default,
+    64 KiB, fits the expression-heavy text pipelines (winnowing folds,
+    shingling, JSON parsing: ~0.1-1 ms per ~100 B compressed row);
+    compute-bound folds pass ``FOLD_BYTES_PER_TASK``; media codecs pass
+    ``functions.multimodal.CODEC_BYTES_PER_TASK``. Select the needed
+    columns before calling: only they cross the exchange."""
+    width = df.sparkSession.sparkContext.defaultParallelism
+    need = spread_need(df, bytes_per_task)
+    if need is not None:
+        width = min(width, need)
+    if df.rdd.getNumPartitions() >= width:
         return df
-    return df.repartition(target)
+    return df.repartition(width)
 
 
 def load_events_range(

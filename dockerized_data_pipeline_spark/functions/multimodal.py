@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import spread_input
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -49,17 +51,8 @@ FEATURE_DIM = 8
 FEATURE_SCHEMA = f"media_id long, feature array<double>"
 
 
-# Per-codec single-blob cost (encode + decode, ms), measured by the r11
-# per-blob microbenchmarks (OPTIMIZATION_r11 "key diagnostic findings").
-# Used to size the Arrow-stage width to the WORK, not to the core count:
-# r11's unconditional full-width spread made the cheap codecs (wav, pgm)
-# FASTER ON 8 CORES THAN 32 at sf0.1 (BENCH_r11 scaling ratios 0.70/0.83)
-# because 32 Python-worker task launches dominated ~0.6 s of actual codec
-# CPU. Width = ceil(est_rows x ms_per_row / SPARK_GRAFT_MEDIA_TASK_MS),
-# capped at the session width -- heavyweight codecs still get every core,
-# and the estimate derives from the plan's size statistics, so it scales
-# with the data instead of being a constant tuned for either local mode
-# or the cluster.
+# Per-codec single-blob cost (encode + decode, ms), measured by per-blob
+# microbenchmarks (OPTIMIZATION_r11.md).
 CODEC_MS_PER_BLOB = {
     "wav": 0.12,
     "pgm": 0.05,
@@ -70,36 +63,15 @@ CODEC_MS_PER_BLOB = {
     "jpeg_progressive": 1.93,
 }
 
-_MEDIA_TASK_MS = float(os.environ.get("SPARK_GRAFT_MEDIA_TASK_MS", "100"))
-
-# plan-estimated bytes per bare int64 id row (8 B value + row overhead)
-_ID_ROW_BYTES = 12
-
-
-def _spread_ids(ids: DataFrame, id_col: str, ms_per_row: float = 1.0) -> DataFrame:
-    """Round-robin the bare id column across enough tasks to keep each
-    Arrow task ~SPARK_GRAFT_MEDIA_TASK_MS of codec work, capped at the
-    session's width, before a synth/codec Arrow stage.
-
-    The fixture tables are small enough to arrive as ONE parquet split
-    (sf0.1 documents = 1 file), and mapInPandas inherits input
-    partitioning -- without this, every codec stage ran on a single core
-    (measured: x4_jpeg_progressive_decode 7.35s ~= 5000 blobs x 1.4ms
-    serial; full-width it is bounded by the stage launch overhead). The
-    shuffle moves only int64 ids, never blobs. At production scale blobs
-    arrive in thousands of splits and the equivalent lever is
-    spark.sql.files.maxPartitionBytes, not a repartition."""
-    sel = ids.select(id_col)
-    spark = ids.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    try:
-        est = int(str(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-        rows = max(1, est // _ID_ROW_BYTES)
-        need = max(1, -(-int(rows * ms_per_row) // int(_MEDIA_TASK_MS)))
-        width = max(1, min(width, need))
-    except Exception:
-        pass  # unknown stats: keep the full session width
-    return sel.repartition(width)
+# Spread hint per codec for catalog.spread_input: plan bytes of id input per
+# ~100 ms Arrow task at 12 plan bytes per id row, i.e. 12 x 100 /
+# ms_per_blob (wav 10,000 B, jpeg_progressive ~622 B). Spark estimates ~25 B
+# per bare id row, so a task gets ~200 ms of codec work; 12 is kept because
+# the codec stage widths were measured with it. The codec stage inherits
+# the partitioning of its id input, and only int64 ids cross the exchange,
+# never blobs; at scale blobs arrive in many splits and the spread is a
+# no-op (the lever there is spark.sql.files.maxPartitionBytes).
+CODEC_BYTES_PER_TASK = {c: 12 * 100 / ms for c, ms in CODEC_MS_PER_BLOB.items()}
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
@@ -118,20 +90,6 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
 def _fake_dims(n_bytes: int) -> tuple[int, int]:
     """Deterministic stand-in for a real header parse."""
     return 64 + n_bytes % 192, 64 + (n_bytes * 7) % 192
-
-
-def _try_real_decode(blob: bytes):
-    """Real codec path, gated: PIL is absent in this container."""
-    try:
-        import io
-
-        from PIL import Image  # noqa: F401
-
-        return Image.open(io.BytesIO(blob)).size
-    except ImportError:
-        return None
-    except Exception:
-        return None
 
 
 def decode_media(media: DataFrame) -> DataFrame:
@@ -363,7 +321,7 @@ def wav_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _spread_ids(ids, id_col, CODEC_MS_PER_BLOB["wav"]).mapInPandas(batches, schema=WAV_SCHEMA)
+    return spread_input(ids.select(id_col), CODEC_BYTES_PER_TASK["wav"]).mapInPandas(batches, schema=WAV_SCHEMA)
 
 
 def _wav_stats(rows) -> pd.DataFrame:
@@ -503,7 +461,7 @@ def pgm_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _spread_ids(ids, id_col, CODEC_MS_PER_BLOB["pgm"]).mapInPandas(batches, schema=WAV_SCHEMA)
+    return spread_input(ids.select(id_col), CODEC_BYTES_PER_TASK["pgm"]).mapInPandas(batches, schema=WAV_SCHEMA)
 
 
 def _pgm_stats(rows) -> pd.DataFrame:
@@ -744,7 +702,7 @@ def y4m_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _spread_ids(ids, id_col, CODEC_MS_PER_BLOB["y4m"]).mapInPandas(batches, schema=WAV_SCHEMA)
+    return spread_input(ids.select(id_col), CODEC_BYTES_PER_TASK["y4m"]).mapInPandas(batches, schema=WAV_SCHEMA)
 
 
 def _y4m_stats(rows) -> pd.DataFrame:
@@ -1003,7 +961,7 @@ def png_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _spread_ids(ids, id_col, CODEC_MS_PER_BLOB["png"]).mapInPandas(batches, schema=WAV_SCHEMA)
+    return spread_input(ids.select(id_col), CODEC_BYTES_PER_TASK["png"]).mapInPandas(batches, schema=WAV_SCHEMA)
 
 
 def _png_stats(rows) -> pd.DataFrame:
@@ -1760,7 +1718,7 @@ def jpeg_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _spread_ids(ids, id_col, CODEC_MS_PER_BLOB["jpeg"]).mapInPandas(batches, schema=WAV_SCHEMA)
+    return spread_input(ids.select(id_col), CODEC_BYTES_PER_TASK["jpeg"]).mapInPandas(batches, schema=WAV_SCHEMA)
 
 
 def _jpeg_gray_stats(rows, parse_fn) -> pd.DataFrame:
@@ -2156,7 +2114,7 @@ def jpeg_color_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _spread_ids(ids, id_col, CODEC_MS_PER_BLOB["jpeg_color"]).mapInPandas(batches, schema=WAV_SCHEMA)
+    return spread_input(ids.select(id_col), CODEC_BYTES_PER_TASK["jpeg_color"]).mapInPandas(batches, schema=WAV_SCHEMA)
 
 
 def decode_jpeg_color(media: DataFrame) -> DataFrame:
@@ -2932,7 +2890,7 @@ def jpeg_progressive_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _spread_ids(ids, id_col, CODEC_MS_PER_BLOB["jpeg_progressive"]).mapInPandas(batches, schema=WAV_SCHEMA)
+    return spread_input(ids.select(id_col), CODEC_BYTES_PER_TASK["jpeg_progressive"]).mapInPandas(batches, schema=WAV_SCHEMA)
 
 
 def decode_jpeg_progressive(media: DataFrame) -> DataFrame:
@@ -2961,22 +2919,23 @@ def decode_jpeg_progressive(media: DataFrame) -> DataFrame:
 
 
 def _synth_decode(
-    ids: DataFrame, id_col: str, encode_fn, stats_fn, schema: str,
-    ms_per_row: float = 1.0,
+    ids: DataFrame, id_col: str, encode_fn, stats_fn, schema: str, codec: str
 ) -> DataFrame:
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             mids = pdf[id_col].astype("int64")
             yield stats_fn((int(m), encode_fn(int(m))) for m in mids)
 
-    return _spread_ids(ids, id_col, ms_per_row).mapInPandas(batches, schema=schema)
+    return spread_input(ids.select(id_col), CODEC_BYTES_PER_TASK[codec]).mapInPandas(
+        batches, schema=schema
+    )
 
 
 def synth_decode_wav(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """decode_wav(wav_media(ids)) in one Arrow stage (identical rows)."""
     return _synth_decode(
         ids, id_col, _wav_encode, _wav_stats, WAV_DECODED_SCHEMA,
-        CODEC_MS_PER_BLOB["wav"],
+        "wav",
     )
 
 
@@ -2984,7 +2943,7 @@ def synth_decode_pgm(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """decode_pgm(pgm_media(ids)) in one Arrow stage (identical rows)."""
     return _synth_decode(
         ids, id_col, _pgm_encode, _pgm_stats, PGM_DECODED_SCHEMA,
-        CODEC_MS_PER_BLOB["pgm"],
+        "pgm",
     )
 
 
@@ -2992,7 +2951,7 @@ def synth_decode_y4m(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """decode_y4m(y4m_media(ids)) in one Arrow stage (identical rows)."""
     return _synth_decode(
         ids, id_col, _y4m_encode, _y4m_stats, Y4M_DECODED_SCHEMA,
-        CODEC_MS_PER_BLOB["y4m"],
+        "y4m",
     )
 
 
@@ -3000,7 +2959,7 @@ def synth_decode_png(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """decode_png(png_media(ids)) in one Arrow stage (identical rows)."""
     return _synth_decode(
         ids, id_col, _png_encode, _png_stats, PNG_DECODED_SCHEMA,
-        CODEC_MS_PER_BLOB["png"],
+        "png",
     )
 
 
@@ -3012,7 +2971,7 @@ def synth_decode_jpeg(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
         _jpeg_encode,
         lambda rows: _jpeg_gray_stats(rows, _jpeg_parse),
         JPEG_DECODED_SCHEMA,
-        CODEC_MS_PER_BLOB["jpeg"],
+        "jpeg",
     )
 
 
@@ -3024,7 +2983,7 @@ def synth_decode_jpeg_color(ids: DataFrame, id_col: str = "doc_id") -> DataFrame
         _jpeg_color_encode,
         lambda rows: _jpeg_rgb_stats(rows, _jpeg_parse_color),
         JPEG_COLOR_SCHEMA,
-        CODEC_MS_PER_BLOB["jpeg_color"],
+        "jpeg_color",
     )
 
 
@@ -3037,5 +2996,5 @@ def synth_decode_jpeg_progressive(ids: DataFrame, id_col: str = "doc_id") -> Dat
         _jpeg_progressive_encode,
         lambda rows: _jpeg_rgb_stats(rows, _jpeg_parse_progressive),
         JPEG_COLOR_SCHEMA,
-        CODEC_MS_PER_BLOB["jpeg_progressive"],
+        "jpeg_progressive",
     )

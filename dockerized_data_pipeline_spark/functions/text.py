@@ -61,17 +61,6 @@ def lang_guess(text: Column | str) -> Column:
     return best
 
 
-def stopword_ratio(text: Column | str) -> Column:
-    """Fraction of tokens that are stopwords, rounded to 6 places.
-
-    The division happens in double with identical operands in any engine
-    (exact int counts), so the rounded value is portable.
-    """
-    stop = marker_score(text, STOPWORDS)
-    total = token_count(text)
-    return F.round(stop.cast("double") / total, 6).cast("decimal(18,6)")
-
-
 def quality_score(text: Column | str, n_chars: Column | str | None = None) -> Column:
     """Composite document quality score in [0, 1]: rewards mid-length docs,
     penalizes very short ones and stopword-free token soup. Deterministic
@@ -128,36 +117,6 @@ def simhash_token_hashes(text: Column | str) -> Column:
 def simhash_votes(hashes: Column) -> Column:
     """Fold the 64 per-bit majority votes over a (pre-staged) token-hash
     array column into the SimHash value."""
-
-    def bit_vote(mask):
-        def fold(acc, h):
-            return acc + F.when(
-                h.bitwiseAND(mask) != F.lit(0).cast("long"), 1
-            ).otherwise(-1)
-
-        return fold
-
-    out = F.lit(0).cast("long")
-    for idx in range(64):
-        mask = F.expr(f"shiftleft(1L, {idx})")
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), bit_vote(mask))
-        out = out.bitwiseOR(F.when(vote > 0, mask).otherwise(F.lit(0).cast("long")))
-    return out
-
-
-def simhash64(text: Column | str) -> Column:
-    """64-bit SimHash over whitespace tokens using xxhash64 (engine-specific;
-    rows-only checkable). Bit i of the result is 1 iff the sum over tokens of
-    (+1 / -1 by token-hash bit i) is positive.
-
-    Composed entirely of higher-order array functions -- per-row, no shuffle;
-    near-dup candidates then cluster by hamming distance on the output.
-    Prefer staging simhash_token_hashes + simhash_votes in a DataFrame
-    pipeline (see operators.dedup.simhash_signatures) -- this single-Column
-    form re-evaluates the token hashing once per bit vote.
-    """
-    toks = F.array_distinct(tokens(text))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
 
     def bit_vote(mask):
         def fold(acc, h):

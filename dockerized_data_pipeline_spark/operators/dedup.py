@@ -15,7 +15,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import simhash_token_hashes, simhash_votes, tokens
@@ -24,19 +24,6 @@ from ..functions.text import simhash_token_hashes, simhash_votes, tokens
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """X1: drop exact duplicates (hash-groupBy under the hood)."""
     return df.dropDuplicates(subset)
-
-
-def exact_dedup_keep_first(
-    df: DataFrame, dedup_cols: list[str], order_by: list[str]
-) -> DataFrame:
-    """Deterministic exact dedup: keep the first row per dedup key ordered by
-    ``order_by`` ascending (e.g. smallest doc_id)."""
-    w = Window.partitionBy(*dedup_cols).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def shingle_set(text_col, n: int):
@@ -78,13 +65,10 @@ def ngram_jaccard_pairs_ppm(
     FLOOR(jaccard * 1e6) -- both engine-portable (no float rounding ties).
     Returns (doc_a, doc_b, jaccard_ppm BIGINT) for pairs >= num/den.
     """
-    from ..catalog import spread_input
+    from ..catalog import FOLD_BYTES_PER_TASK, spread_input
 
     sh = shingles(
-        spread_input(
-            df.select(id_col, text_col),
-            width=df.sparkSession.sparkContext.defaultParallelism,
-        ),
+        spread_input(df.select(id_col, text_col), FOLD_BYTES_PER_TASK),
         text_col,
         n,
     ).select(F.col(id_col).alias("doc"), "shingle")
@@ -136,13 +120,10 @@ def ngram_containment_ppm(
     Returns (corpus_doc, bench_doc, containment_ppm) for pairs with
     containment >= threshold_num/threshold_den.
     """
-    from ..catalog import spread_input
+    from ..catalog import FOLD_BYTES_PER_TASK, spread_input
 
     c_sh = shingles(
-        spread_input(
-            corpus.select(id_col, text_col),
-            width=corpus.sparkSession.sparkContext.defaultParallelism,
-        ),
+        spread_input(corpus.select(id_col, text_col), FOLD_BYTES_PER_TASK),
         text_col,
         n,
     ).select(F.col(id_col).alias("corpus_doc"), "shingle")
@@ -286,14 +267,13 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     vote fold would otherwise emit a meaningless all-zero signature that
     "matches" every other NULL-text doc at hamming 0). Same policy as
     MinHash, where a NULL text simply yields no shingles."""
-    from ..catalog import spread_input
+    from ..catalog import FOLD_BYTES_PER_TASK, spread_input
 
-    # r11: the 64-bit vote fold is heavy per-row expression work; spread
-    # a single-split input across the session width (no-op on multi-split
-    # inputs; catalog.spread_input)
+    # the 64-bit vote fold is heavy per-row expression work; spread a
+    # single-split input (no-op on multi-split inputs)
     staged = spread_input(
         df.filter(F.col(text_col).isNotNull()).select(id_col, text_col),
-        width=df.sparkSession.sparkContext.defaultParallelism,
+        FOLD_BYTES_PER_TASK,
     ).select(
         F.col(id_col), simhash_token_hashes(F.col(text_col)).alias("__sh_hashes")
     )

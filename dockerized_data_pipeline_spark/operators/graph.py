@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..catalog import FOLD_BYTES_PER_TASK, spread_input
+
 
 def triangle_count_bitset(
     edges: DataFrame, a_col: str = "a", b_col: str = "b"
@@ -85,9 +87,10 @@ def triangle_count_bitset(
     mb = masks.select(F.col("na").alias("k_b"), F.col("mask").alias("mask_b"))
     # nodes without out-edges have no mask row; the inner join drops those
     # edges, which is exact -- their common-out-neighbor count is 0
-    width = edges.sparkSession.sparkContext.defaultParallelism
+    # spread the per-edge scoring: the checkpointed frame may be one
+    # coalesced partition
     return (
-        ed.repartition(width)  # checkpointed frame may be 1 coalesced part
+        spread_input(ed, FOLD_BYTES_PER_TASK)
         .join(F.broadcast(ma), F.col("na") == F.col("k_a"))
         .join(F.broadcast(mb), F.col("nb") == F.col("k_b"))
         .select(

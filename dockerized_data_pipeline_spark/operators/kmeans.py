@@ -111,22 +111,16 @@ def kmeans_fit(
     policy applies across operators/similarity.py; oracles mirror it
     with ``WHERE embedding IS NOT NULL``."""
     df = df.filter(F.col(vec_col).isNotNull())
-    # r11: the per-iteration argmin is k x dim interpreted fold work per
-    # row, and a single-split input runs it all in ONE task (measured
-    # ~1.4 s/iteration at k=32, dim=64, 31 cores idle). Spread the
-    # projected (id, vec) frame across the session width (no-op on
-    # multi-split inputs) and persist it so each Lloyd's iteration is one
-    # cached-columnar scan instead of scan+exchange -- the exact shape
-    # the module docstring promises at 100 TB.
-    from ..catalog import spread_input
+    # The per-iteration argmin is k x dim interpreted fold work per row
+    # (~4 ms/row at k=32 x dim=64): spread the projected (id, vec) frame
+    # across the session (no-op on multi-split inputs) and persist it, so
+    # each Lloyd's iteration is one cached-columnar scan instead of
+    # scan+exchange -- the exact shape the module docstring promises at
+    # 100 TB.
+    from ..catalog import FOLD_BYTES_PER_TASK, spread_input
 
-    # explicit full width (r12): the byte-based width cap added to
-    # spread_input is sized for text pipelines; the assignment fold here
-    # costs ~4 ms/row at k=32 x dim=64 (interpreted HOF), so even a tiny
-    # input saturates every core
     vecs = spread_input(
-        df.select(F.col(id_col), F.col(vec_col)),
-        width=df.sparkSession.sparkContext.defaultParallelism,
+        df.select(F.col(id_col), F.col(vec_col)), FOLD_BYTES_PER_TASK
     ).persist()
     try:
         return _kmeans_fit_cached(vecs, id_col, vec_col, k, iterations)
@@ -202,14 +196,11 @@ def kmeans_cluster_sizes(
     just sum the per-cluster values."""
     df = df.filter(F.col(vec_col).isNotNull())  # same policy as kmeans_fit
     centroids = kmeans_fit(df, id_col, vec_col, k, iterations)
-    # spread the final-assignment scan too (same single-task rationale)
-    from ..catalog import spread_input
+    # spread the final-assignment scan too (same per-row fold cost)
+    from ..catalog import FOLD_BYTES_PER_TASK, spread_input
 
     assigned = _with_assignment(
-        spread_input(
-            df.select(F.col(vec_col).alias("v")),
-            width=df.sparkSession.sparkContext.defaultParallelism,
-        ),
+        spread_input(df.select(F.col(vec_col).alias("v")), FOLD_BYTES_PER_TASK),
         "v",
         centroids,
     )

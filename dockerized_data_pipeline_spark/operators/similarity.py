@@ -61,6 +61,7 @@ def cosine_neardup_pairs(
     at 6k vectors). The pair arithmetic is still dot/(norm*norm) with the
     same left-to-right folds, so scores stay bit-identical to the DuckDB
     oracle's expression."""
+    from ..catalog import FOLD_BYTES_PER_TASK, spread_input
     from ..functions.vectors import dot, norm
 
     side = (
@@ -69,14 +70,12 @@ def cosine_neardup_pairs(
         .withColumn("nrm", norm(F.col("v")))
     )
     side = side.localCheckpoint(eager=True)
-    # r11: spread the LEFT side of the cartesian across the session width
-    # -- a single-split corpus otherwise makes the n^2 scoring loop ONE
-    # task (measured 22 s at sf0.1, 32 cores idle); the cartesian's task
-    # grid is left.partitions x right.partitions, so only the left side
-    # needs spreading and only (id, v, nrm) rows cross the tiny exchange.
-    width = df.sparkSession.sparkContext.defaultParallelism
-    a_side = side if side.rdd.getNumPartitions() >= width else side.repartition(width)
-    a = a_side.select(
+    # Spread the LEFT side of the cartesian: a single-split corpus otherwise
+    # makes the n^2 scoring loop ONE task (measured 22 s at sf0.1, 32 cores
+    # idle); the cartesian's task grid is left.partitions x
+    # right.partitions, so only the left side needs spreading and only
+    # (id, v, nrm) rows cross the tiny exchange.
+    a = spread_input(side, FOLD_BYTES_PER_TASK).select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     )
     b = side.select(
@@ -111,18 +110,12 @@ def ivf_assignments(
     """
     import math
 
-    from ..catalog import spread_input
+    from ..catalog import FOLD_BYTES_PER_TASK, spread_input
     from ..functions.vectors import dot, norm
 
-    # r11: the k x dim argmax is per-row fold work; a single-split input
-    # runs it in one task -- spread across the session width (no-op on
-    # multi-split inputs; see catalog.spread_input)
-    # explicit full width (r12): k x dim interpreted fold per row --
-    # the byte-sized cap in spread_input is for text pipelines
-    df = spread_input(
-        df.filter(F.col(vec_col).isNotNull()),
-        width=df.sparkSession.sparkContext.defaultParallelism,
-    )
+    # the k x dim argmax is per-row fold work; a single-split input runs it
+    # in one task -- spread it (no-op on multi-split inputs)
+    df = spread_input(df.filter(F.col(vec_col).isNotNull()), FOLD_BYTES_PER_TASK)
 
     # The codebook travels as broadcast DATA (1-row frame, cross-joined),
     # not as plan literals (r9, same rationale as kmeans._with_assignment:

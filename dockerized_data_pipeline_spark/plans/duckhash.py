@@ -181,15 +181,6 @@ def xxh64_long(s: Steps, v_u: str, seed_u: str) -> str:
     return _fmix(s, h)
 
 
-def xxh64_int(s: Steps, i_u32: str, seed_u: str) -> str:
-    """Steps for Spark hashInt; i_u32 is the int's unsigned 32-bit value
-    (for non-negative Python ints < 2^31, the value itself)."""
-    h = s.add(_wadd(_wadd(seed_u, _c(P5)), _c(4)))
-    h = s.add(_xor(h, _wmul(f"CAST({i_u32} AS UBIGINT)", P1)))
-    h = s.add(_wadd(_wmul(_rotl(h, 23), P2), _c(P3)))
-    return _fmix(s, h)
-
-
 def xxh64_ascii(s: Steps, txt: str, seed_u: str) -> str:
     """Steps for Spark hashBytes over the UTF-8 bytes of ``txt``, valid
     for byte length < 32 (no stripe loop). Returns the unsigned result

@@ -23,17 +23,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, scoped_views
 from .registry import query
 
-# Tight decimal widths keep multi-factor decimal products within precision 38
-# (exact in both Spark and DuckDB): prices < 1e8, rates < 10.
+# Tight decimal width keeps decimal products within precision 38 (exact in
+# both Spark and DuckDB): prices < 1e8.
 PRICE_DEC = "decimal(12,4)"
-RATE_DEC = "decimal(7,4)"
-
-
-def _revenue_col() -> F.Column:
-    """sum(l_extendedprice * (1 - l_discount)) -- exact decimal arithmetic."""
-    ext = F.col("l_extendedprice").cast(PRICE_DEC)
-    disc = F.col("l_discount").cast(RATE_DEC)
-    return F.sum(ext * (F.lit(1).cast(RATE_DEC) - disc))
 
 
 # ---------------------------------------------------------------------------
@@ -53,7 +45,7 @@ def _revenue_col() -> F.Column:
 #
 # Range honesty: a scale-1e4 revenue long sum overflows past ~9.2e14 of
 # summed revenue (~sf 4000 in one group); ANSI mode fails loudly there,
-# and the decimal path above remains the documented fallback. Every
+# and a per-row PRICE_DEC cast remains the documented fallback. Every
 # declared tier (<= sf10) is orders of magnitude inside the bound.
 _CENTS_SAFE_ABS = 1 << 45  # |x|*100 stays exactly representable far below this
 
@@ -61,11 +53,16 @@ _CENTS_SAFE_ABS = 1 << 45  # |x|*100 stays exactly representable far below this
 # path is now ENFORCEABLE, not just documented. With
 # SPARK_GRAFT_MONEY_AUDIT=1, every _cents() conversion asserts per row that
 # the input really is an exact 2-decimal quantity (|x*100 - round(x*100)|
-# <= eps) and raises loudly otherwise -- the verify/debug-mode posture for
-# onboarding a new data tier. Off (the default) the expression is the bare
-# round+cast, zero overhead. tools/audit_money.py runs the same residual
-# check offline over every committed tier.
+# within the bound below) and raises loudly otherwise -- the verify/debug
+# posture for onboarding a new data tier. Off (the default) the expression
+# is the bare round+cast, zero overhead. tools/audit_money.py runs the same
+# residual check offline over every committed tier. The bound is
+# magnitude-aware, max(1e-6, |x*100| * 1e-15): a clean value's residual is
+# two double roundings, at most |x*100| * 2.2e-16, which passes a flat 1e-6
+# above ~$86M; a 3-decimal value leaves a residual >= 0.1, still caught for
+# every |x| < 1e12.
 _CENTS_EPS = 1e-6
+_CENTS_REL_EPS = 1e-15
 
 
 def _money_audit_on() -> bool:
@@ -80,7 +77,8 @@ def _cents(name: str) -> F.Column:
     r = F.round(scaled, 0)
     if _money_audit_on():
         r = F.when(
-            F.abs(scaled - r) > _CENTS_EPS,
+            F.abs(scaled - r)
+            > F.greatest(F.lit(_CENTS_EPS), F.abs(scaled) * _CENTS_REL_EPS),
             F.raise_error(
                 F.concat(
                     F.lit(

@@ -169,35 +169,47 @@ def scoped_sql_conf(spark: SparkSession, confs: dict[str, str]):
         if reg is None:
             reg = {}
             spark._ddp_scoped_conf_state = reg
-        for k, v in confs.items():
-            ent = reg.get(k)
-            if ent is None:
-                try:
-                    orig = spark.conf.get(k)
-                except Exception:
-                    orig = None
-                reg[k] = [1, orig, v]
-                spark.conf.set(k, v)
-            elif ent[2] != v:
-                raise ValueError(
-                    f"scoped_sql_conf: nested conflicting values for {k}: "
-                    f"active {ent[2]!r}, requested {v!r}"
-                )
-            else:
-                ent[0] += 1
+        applied = []
+        try:
+            for k, v in confs.items():
+                ent = reg.get(k)
+                if ent is None:
+                    try:
+                        orig = spark.conf.get(k)
+                    except Exception:
+                        orig = None
+                    spark.conf.set(k, v)
+                    reg[k] = [1, orig, v]
+                elif ent[2] != v:
+                    raise ValueError(
+                        f"scoped_sql_conf: nested conflicting values for {k}: "
+                        f"active {ent[2]!r}, requested {v!r}"
+                    )
+                else:
+                    ent[0] += 1
+                applied.append(k)
+        except BaseException:
+            # partial entry: undo the keys this call already took
+            _release_scoped(spark, reg, applied)
+            raise
     try:
         yield
     finally:
         with _SCOPED_CONF_LOCK:
-            for k in confs:
-                ent = reg[k]
-                ent[0] -= 1
-                if ent[0] == 0:
-                    del reg[k]
-                    if ent[1] is None:
-                        spark.conf.unset(k)
-                    else:
-                        spark.conf.set(k, ent[1])
+            _release_scoped(spark, reg, confs)
+
+
+def _release_scoped(spark: SparkSession, reg: dict, keys) -> None:
+    """Drop one reference per key; the last one restores the original."""
+    for k in keys:
+        ent = reg[k]
+        ent[0] -= 1
+        if ent[0] == 0:
+            del reg[k]
+            if ent[1] is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, ent[1])
 
 
 def get_session(

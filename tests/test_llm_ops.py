@@ -1086,7 +1086,7 @@ def test_jpeg_codec_roundtrip_and_integrity(spark):
 def test_jpeg_decode_query_plan_has_only_id_spread_exchange(spark, sf_dir):
     """decode(jpeg_media(ids)) is two chained Arrow stages over the scan.
     The ONLY exchange is the deliberate round-robin spread of the bare
-    int64 id column ahead of the synth stage (multimodal._spread_ids:
+    int64 id column ahead of the synth stage (catalog.spread_input:
     the single-split fixture otherwise pins every codec to one core);
     blobs themselves never shuffle -- at 100 TB this is embarrassingly
     parallel."""

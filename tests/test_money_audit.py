@@ -9,6 +9,8 @@ MONEY_AUDIT_r12.txt)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from dockerized_data_pipeline_spark.plans import relational
@@ -29,14 +31,40 @@ def test_audit_mode_rejects_three_decimal_money(spark, monkeypatch):
 
 def test_audit_mode_passes_clean_values_and_nulls(spark, monkeypatch):
     cents = _cents_with_audit(monkeypatch)
+    # 134225073.61 * 100 == 13422507361.000002 in doubles: a residual of
+    # one ulp (1.9e-6), above a flat 1e-6 bound but still a clean value
     df = spark.createDataFrame(
-        [(1.25,), (0.10,), (None,), (12345.99,)], "l_extendedprice double"
+        [(1.25,), (0.10,), (None,), (12345.99,), (134225073.61,)],
+        "l_extendedprice double",
     )
     got = {
         r["c"]
         for r in df.select(cents("l_extendedprice").alias("c")).collect()
     }
-    assert got == {125, 10, None, 1234599}
+    assert got == {125, 10, None, 1234599, 13422507361}
+
+
+def test_offline_audit_bound_is_magnitude_aware(tmp_path):
+    import sys
+
+    import duckdb
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    import audit_money
+
+    tier = tmp_path / "tier"
+    tier.mkdir()
+
+    def write_lineitem(price):
+        duckdb.sql(
+            f"SELECT {price}::DOUBLE AS l_extendedprice, "
+            "0.05::DOUBLE AS l_discount, 3.0::DOUBLE AS l_quantity"
+        ).write_parquet(str(tier / "lineitem.parquet"))
+
+    write_lineitem("134225073.61")
+    assert audit_money.main([str(tier)]) == 0
+    write_lineitem("134225073.615")
+    assert audit_money.main([str(tier)]) == 1
 
 
 def test_audit_off_is_the_bare_fast_path(spark, monkeypatch):

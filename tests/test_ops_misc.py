@@ -63,6 +63,32 @@ def _payload(symbol):
     )
 
 
+def test_scoped_sql_conf_rolls_back_partial_entry(spark):
+    # a nested scope whose SECOND key conflicts raises before its body; the
+    # first key it already set must be undone, not left set and refcounted
+    from dockerized_data_pipeline_spark.session import scoped_sql_conf
+
+    def confs():
+        return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+
+    with scoped_sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        conf_before = confs()
+        state_before = {
+            k: list(v) for k, v in spark._ddp_scoped_conf_state.items()
+        }
+        with pytest.raises(ValueError, match="conflicting"):
+            with scoped_sql_conf(
+                spark,
+                {
+                    "spark.sql.shuffle.partitions": "3",
+                    "spark.sql.adaptive.enabled": "true",
+                },
+            ):
+                pass
+        assert confs() == conf_before
+        assert spark._ddp_scoped_conf_state == state_before
+
+
 def test_fetch_with_fake_transport_isolation_and_rate_limit(spark):
     calls, sleeps = [], []
 

@@ -5,7 +5,7 @@ double is an exact 2-decimal quantity, so that round(x*100) as BIGINT is the
 exact cent value (bit-identical to the old per-row DECIMAL(12,4) cast). This
 tool verifies that assumption offline over every committed data tier: for
 each money column it reports max |x*100 - round(x*100)| and the count of
-rows past epsilon. Exit 1 on any violation.
+rows past the bound (max(1e-6, |x*100| * 1e-15)). Exit 1 on any violation.
 
 The runtime twin is SPARK_GRAFT_MONEY_AUDIT=1 (plans/relational.py::_cents),
 which raises per offending row in verify/debug runs.
@@ -21,7 +21,9 @@ import sys
 
 import duckdb
 
+# same magnitude-aware bound as plans/relational.py::_cents
 EPS = 1e-6
+REL_EPS = 1e-15
 
 # (table, column) pairs consumed by the scaled-long path. events.value is
 # included for the integer-cents time-series family (engine and oracle both
@@ -40,8 +42,8 @@ DEFAULT_TIERS = sorted(
 )
 
 
-def main() -> int:
-    tiers = sys.argv[1:] or DEFAULT_TIERS
+def main(argv: list[str] | None = None) -> int:
+    tiers = (sys.argv[1:] if argv is None else argv) or DEFAULT_TIERS
     con = duckdb.connect()
     bad = 0
     for tier in tiers:
@@ -54,7 +56,8 @@ def main() -> int:
                 SELECT COUNT(*) AS n,
                        MAX(ABS({col} * 100 - ROUND({col} * 100))) AS max_resid,
                        SUM(CASE WHEN ABS({col} * 100 - ROUND({col} * 100))
-                                     > {EPS} THEN 1 ELSE 0 END) AS n_bad
+                                     > GREATEST({EPS}, ABS({col} * 100) * {REL_EPS})
+                                THEN 1 ELSE 0 END) AS n_bad
                 FROM '{path}' WHERE {col} IS NOT NULL
                 """
             ).fetchone()
@@ -67,7 +70,7 @@ def main() -> int:
                 f"max_resid={max_resid if max_resid is not None else 0:.3e} "
                 f"violations={n_bad or 0}"
             )
-    print(f"\n{bad} violating (tier, column) pairs; eps={EPS}")
+    print(f"\n{bad} violating (tier, column) pairs; eps=max({EPS}, |x*100|*{REL_EPS})")
     return 1 if bad else 0
 
 

@@ -1,8 +1,9 @@
 """Generate PLANS.md: one row per registered query summarizing the physical
 plan features the 100 TB posture depends on -- shuffle count, broadcast vs
 sort-merge joins, pushed filters, windows, generators, Python eval nodes,
-top-k operators. Run after adding queries; the diff shows plan regressions
-at review time the way BENCH_r*.json shows time regressions.
+top-k operators, and the width of every round-robin spread
+(catalog.spread_input). Run after adding queries; the diff shows plan
+regressions at review time the way BENCH_r*.json shows time regressions.
 
 Usage: python tools/plan_report.py [sf_dir]   (writes PLANS.md)
 """
@@ -10,11 +11,12 @@ Usage: python tools/plan_report.py [sf_dir]   (writes PLANS.md)
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -70,6 +72,16 @@ def summarize(plan: str) -> dict[str, object]:
         )
         + ("+RowUDF!" if "BatchEvalPython" in plan else ""),
         "cartesian": "yes" if "CartesianProduct" in plan else "",
+        # width of each round-robin spread exchange; Spark plans a width-1
+        # repartition as SinglePartition
+        "spread": " ".join(
+            w or "1"
+            for w, _ in re.findall(
+                r"Arguments: (?:RoundRobinPartitioning\((\d+)\)|(SinglePartition)), "
+                r"REPARTITION_BY_NUM",
+                plan,
+            )
+        ),
     }
 
 
@@ -95,19 +107,20 @@ def main() -> int:
         "",
         f"Scale dir: `{sf_dir}`. Columns: shuffle exchanges / broadcast vs",
         "sort-merge joins / windows / generators / distributed top-k /",
-        "scans with pushed filters / Python eval nodes (RowUDF! = regression).",
+        "scans with pushed filters / Python eval nodes (RowUDF! = regression) /",
+        "round-robin spread widths.",
         "",
-        "| query | shuffles | BHJ | SMJ | window | generate | top-k | pushed-scans | python | cartesian |",
-        "|---|---|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | BHJ | SMJ | window | generate | top-k | pushed-scans | python | cartesian | spread |",
+        "|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, s in rows:
         if "error" in s:
-            out.append(f"| {name} | ERROR: {s['error']} | | | | | | | | |")
+            out.append(f"| {name} | ERROR: {s['error']} | | | | | | | | | |")
             continue
         out.append(
             f"| {name} | {s['shuffles']} | {s['bhj']} | {s['smj']} | "
             f"{s['window']} | {s['generate']} | {s['topk']} | {s['pushed']} | "
-            f"{s['python']} | {s['cartesian']} |"
+            f"{s['python']} | {s['cartesian']} | {s['spread']} |"
         )
     with open("PLANS.md", "w", encoding="utf-8") as fh:
         fh.write("\n".join(out) + "\n")
