@@ -77,6 +77,13 @@ def _with_assignment(df: DataFrame, vec_col: str, centroids: list[list[float]]) 
     )
 
 
+def _malformed(vec_col: str, dim: int) -> ValueError:
+    return ValueError(
+        f"kmeans: every {vec_col!r} vector must have {dim} non-null "
+        "elements (found a null element or a ragged vector)"
+    )
+
+
 def seed_centroids(
     df: DataFrame, id_col: str, vec_col: str, k: int
 ) -> list[list[float]]:
@@ -137,6 +144,8 @@ def _kmeans_fit_cached(
     if not centroids:
         return []
     dim = len(centroids[0])
+    if any(len(c) != dim or None in c for c in centroids):
+        raise _malformed(vec_col, dim)
     # r12: the per-iteration aggregate is TRANSPOSED -- posexplode the
     # vector and sum ONE decimal column grouped by (cluster_id, pos)
     # instead of dim separate sum(v[i]) aggregates. The old shape carried
@@ -162,7 +171,7 @@ def _kmeans_fit_cached(
                 )
                 .groupBy("cluster_id", "pos_")
                 .agg(
-                    F.count("*").alias("n"),
+                    F.count("x_").alias("n"),
                     F.expr(f"sum(cast(x_ as {_ACC})) AS s"),
                 )
                 .collect()
@@ -170,8 +179,18 @@ def _kmeans_fit_cached(
             new = [list(c) for c in centroids]
             comps: dict[int, list] = {}
             for r in sums:
+                if r.pos_ >= dim:
+                    raise _malformed(vec_col, dim)
                 comps.setdefault(r.cluster_id, [None] * dim)[r.pos_] = (r.s, r.n)
             for cid, parts in comps.items():
+                # a null element or a ragged vector has no distance to any
+                # centroid (cluster_id NULL) and shows up as a missing
+                # position or unequal non-null counts across positions
+                if cid is None or None in parts:
+                    raise _malformed(vec_col, dim)
+                counts = {n for _, n in parts}
+                if len(counts) != 1 or 0 in counts:
+                    raise _malformed(vec_col, dim)
                 new[cid] = [float(s) / n for (s, n) in parts]
             centroids = new
     return centroids

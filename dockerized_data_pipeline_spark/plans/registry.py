@@ -161,7 +161,11 @@ def roundtrip_double_casts(sql: str) -> str:
     i = 0
     upper = sql.upper()
     lower = sql.lower()
-    spans = _funcall_spans(sql)
+    # only funcall spans that reference embedding can exempt a cast;
+    # filtering once keeps the per-cast check linear in those spans
+    emb_spans = [
+        (o, c_) for o, c_ in _funcall_spans(sql) if "embedding" in lower[o:c_]
+    ]
     while True:
         j = _next_cast(sql, upper, i)
         if j == -1:
@@ -183,9 +187,7 @@ def roundtrip_double_casts(sql: str) -> str:
         inner = sql[j + 5 : k - 1]
         m = _AS_DOUBLE_TAIL.search(inner)
         embedding_ctx = "embedding" in inner.lower() or any(
-            o < j < c_ and "embedding" in lower[o : c_]
-            for o, c_ in spans
-            if o < j
+            o < j < c_ for o, c_ in emb_spans
         )
         if m and not embedding_ctx:
             # recursion is context-free-safe here: the body has no

@@ -32,8 +32,9 @@ def tuned_skew_conf(
     are sized for multi-GB cluster shuffles; below ~50 MB/partition the skew
     split simply never fires (measured by tools/skew_probe.py), so a 5-10x
     straggler rides through untouched. This profile re-derives the three knobs
-    from the median shuffle-partition size actually observed (REST taskSummary
-    or table statistics):
+    from the median shuffle-partition size actually observed (the status
+    store's task summary, :func:`measured_median_shuffle_bytes`, or table
+    statistics):
 
       * threshold = max(median * factor, 1 MiB) -- a partition `factor`x the
         median is "skewed", matching the straggler criterion the salted join
@@ -49,8 +50,7 @@ def tuned_skew_conf(
     metrics of a representative run (or `ANALYZE TABLE` sizes /
     numShufflePartitions); the point is the knobs scale WITH the data rather
     than being absolute constants. Apply via
-    `get_session(extra_conf=tuned_skew_conf(...))` or the
-    SPARK_GRAFT_SKEW_TUNE_BYTES env flag.
+    `get_session(extra_conf=tuned_skew_conf(...))`.
     """
     median = max(int(median_partition_bytes), 1)
     thr = max(int(median * factor), 1 << 20)
@@ -67,64 +67,74 @@ def tuned_skew_conf(
     }
 
 
+def completed_stages(spark: SparkSession, first_stage_after: int = 0) -> list:
+    """Completed stages with ``stageId >= first_stage_after``, as Spark's
+    ``status.api.v1.StageData`` (py4j proxies), read from the driver's
+    in-process ``AppStatusStore`` -- the store the UI's REST endpoints
+    serve, populated whether or not the UI runs. Drains the listener bus
+    first: stage-completed events reach the store asynchronously, so a
+    stage whose action has just returned would otherwise be missing."""
+    sc = spark.sparkContext
+    jvm, jsc = sc._jvm, sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    complete = jvm.java.util.Collections.singletonList(
+        jvm.org.apache.spark.status.api.v1.StageStatus.COMPLETE
+    )
+    stages = jsc.statusStore().stageList(
+        complete, False, False, sc._gateway.new_array(jvm.double, 0),
+        jvm.java.util.Collections.emptyList(),
+    )
+    return [
+        s for s in jvm.scala.jdk.javaapi.CollectionConverters.asJava(stages)
+        if s.stageId() >= first_stage_after
+    ]
+
+
+def task_quantiles(spark: SparkSession, stage, quantiles=(0.0, 0.5, 1.0)):
+    """Per-task metric quantiles of a :func:`completed_stages` entry as
+    Spark's ``TaskMetricDistributions`` (each field an indexed sequence,
+    one value per quantile: ``d.executorRunTime().apply(i)``), or None
+    when the store no longer holds the stage's tasks
+    (``spark.ui.retainedStages`` eviction)."""
+    sc = spark.sparkContext
+    q = sc._gateway.new_array(sc._jvm.double, len(quantiles))
+    for i, v in enumerate(quantiles):
+        q[i] = float(v)
+    store = sc._jsc.sc().statusStore()
+    d = store.taskSummary(stage.stageId(), stage.attemptId(), q)
+    return d.get() if d.isDefined() else None
+
+
 def measured_median_shuffle_bytes(
     spark: SparkSession, first_stage_after: int = 0
 ) -> int | None:
     """Median per-task shuffle-read bytes of the heaviest shuffle-read
     stage completed since the ``first_stage_after`` watermark, read from
-    the Spark REST API (requires ``spark.ui.enabled=true``).
+    the status store (:func:`completed_stages`).
 
     This is the partition statistic :func:`tuned_skew_conf` scales its
-    thresholds from. Returns None when the UI is off or no stage has
-    shuffled yet. On a real cluster the same endpoint serves per-app
-    history, so a nightly job can derive tomorrow's profile from
-    tonight's run."""
-    import json
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return None
-    app_id = spark.sparkContext.applicationId
-
-    def rest(url: str):
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return json.loads(r.read())
-
-    try:
-        stages = rest(f"{base}/api/v1/applications/{app_id}/stages?status=complete")
-    except OSError:
-        return None
+    thresholds from. Returns None when no stage has shuffled yet. On a
+    real cluster the history server serves the same per-stage data, so a
+    nightly job can derive tomorrow's profile from tonight's run."""
     new = [
-        s for s in stages
-        if s["stageId"] >= first_stage_after and s.get("shuffleReadBytes", 0) > 0
+        s for s in completed_stages(spark, first_stage_after)
+        if s.shuffleReadBytes() > 0
     ]
     if not new:
         return None
-    s = max(new, key=lambda s: s["shuffleReadBytes"])
-    try:
-        # the stage can be evicted (spark.ui.retainedStages) between the
-        # list call and this one, or the HTTP hop can transiently fail --
-        # fall back to the stage-level mean rather than escaping the
-        # documented returns-None-when-unavailable contract
-        q = rest(
-            f"{base}/api/v1/applications/{app_id}/stages/{s['stageId']}/"
-            f"{s['attemptId']}/taskSummary?quantiles=0.0,0.5,1.0"
-        )
-    except OSError:
-        q = {}
-    rb = q.get("shuffleReadMetrics", {}).get("readBytes")
-    if rb:
-        return int(rb[1])
-    return int(s["shuffleReadBytes"] / max(s.get("numCompleteTasks", 1), 1))
+    s = max(new, key=lambda s: s.shuffleReadBytes())
+    d = task_quantiles(spark, s)
+    if d is None:  # task summary evicted: fall back to the stage-level mean
+        return int(s.shuffleReadBytes() / max(s.numCompleteTasks(), 1))
+    return int(d.shuffleReadMetrics().readBytes().apply(1))
 
 
 def auto_skew_profile(
     spark: SparkSession, first_stage_after: int = 0, factor: float = 2.0
 ) -> dict[str, str]:
     """Self-deriving AQE skew profile: measure the median shuffle
-    partition of the run so far via the REST API and scale the skew-join
-    knobs to it (:func:`tuned_skew_conf`). Removes the hand-fed
+    partition of the run so far from the status store and scale the
+    skew-join knobs to it (:func:`tuned_skew_conf`). Removes the hand-fed
     median-bytes input -- run a representative query, then apply this
     profile to the rest of the job. Raises when no shuffle stats exist
     yet (nothing to derive from beats silently keeping the cluster-scale
@@ -133,7 +143,7 @@ def auto_skew_profile(
     if med is None:
         raise RuntimeError(
             "auto_skew_profile: no completed shuffle stage to measure "
-            "(is spark.ui.enabled=true and has a shuffling query run?)"
+            "(has a shuffling query run since the watermark?)"
         )
     return tuned_skew_conf(med, factor)
 
@@ -235,41 +245,13 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off by default (ADVICE r7: an opt-out Jetty listener on 4040+
-        # bound to the driver host is a network-surface change for every
-        # library user, headless/CI included). The metrics-consuming tools
-        # opt in: set SPARK_GRAFT_UI=1 (the test conftest and tools/
-        # skew_probe.py do) so the REST endpoints behind auto_skew_profile /
-        # measured_median_shuffle_bytes are live; both helpers keep their
-        # documented fail-loudly/returns-None contract when the UI is off.
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI", "0") == "1" else "false",
-        )
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # Read parquet TIMESTAMP(NANOS) (unsupported natively) as raw nanos;
         # catalog.load_table converts them to TimestampType at the edge.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    # Opt-in tuned AQE skew profile (VERDICT r4 item 7): scale the skew-split
-    # knobs to a known median shuffle-partition size instead of Spark's
-    # cluster-scale absolute defaults. Off unless the env flag carries a size.
-    tune_bytes = os.environ.get("SPARK_GRAFT_SKEW_TUNE_BYTES")
-    if tune_bytes:
-        try:
-            median_bytes = int(tune_bytes)
-        except ValueError:
-            import warnings
-
-            warnings.warn(
-                "SPARK_GRAFT_SKEW_TUNE_BYTES must be a plain byte integer "
-                f"(got {tune_bytes!r}); skew tuning disabled for this session",
-                stacklevel=2,
-            )
-        else:
-            for k, v in tuned_skew_conf(median_bytes).items():
-                builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -16,11 +16,6 @@ SF_SMOKE = os.path.join(
 
 @pytest.fixture(scope="session")
 def spark():
-    # UI on for the test session (library default is off, ADVICE r7): the
-    # REST-metrics tests (auto_skew_profile end-to-end) need the endpoints.
-    import os
-
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")
     s = get_session("ddp-tests", shuffle_partitions=8)
     yield s
 

@@ -524,3 +524,29 @@ def test_kmeans_and_semantic_dedup_tolerate_empty_corpus(spark):
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     assert kmeans_fit(empty, "vec_id", "embedding", k=8, iterations=2) == []
     assert semantic_dedup(empty, k=8, iterations=2).count() == 0
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [[1.0, None, 0.5], [2.0, 1.0]],
+    ids=["null_element", "short_vector"],
+)
+def test_kmeans_rejects_malformed_vectors(spark, bad):
+    """A vector with a null element or the wrong length has no defined
+    distance or mean; the fit must name the column instead of raising a
+    TypeError or silently shifting per-position means. The bad row is
+    checked both as a seed (k covers every row) and as a non-seed row
+    (seeds are the k smallest md5(id); the bad row has the largest)."""
+    import hashlib
+
+    from dockerized_data_pipeline_spark.operators.kmeans import kmeans_fit
+
+    bad_id = max(range(13), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    rows = [
+        (i, bad if i == bad_id else [float(i), float(i % 3), 1.0])
+        for i in range(13)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for k in (13, 2):
+        with pytest.raises(ValueError, match="'embedding'"):
+            kmeans_fit(df, "vec_id", "embedding", k=k, iterations=2)

@@ -184,3 +184,119 @@ def test_double_cast_roundtrip_skips_literals_and_comments():
     assert roundtrip_double_casts(body) == (
         "CAST(CAST(coalesce(s, ')(') AS VARCHAR) AS DOUBLE)"
     )
+
+
+def _ref_roundtrip_double_casts(sql: str) -> str:
+    """Independent reference for roundtrip_double_casts: the original
+    scan, which re-tests every enclosing funcall span for the
+    ``embedding`` token at every cast (quadratic, but obviously
+    faithful to the exemption rule)."""
+    from dockerized_data_pipeline_spark.plans.registry import (
+        _AS_DOUBLE_TAIL,
+        _funcall_spans,
+        _next_cast,
+        _skip_quoted_or_comment,
+    )
+
+    out: list[str] = []
+    i = 0
+    upper, lower = sql.upper(), sql.lower()
+    spans = _funcall_spans(sql)
+    while True:
+        j = _next_cast(sql, upper, i)
+        if j == -1:
+            out.append(sql[i:])
+            return "".join(out)
+        k, depth = j + 5, 1
+        while k < len(sql) and depth:
+            k2 = _skip_quoted_or_comment(sql, k)
+            if k2 != k:
+                k = k2
+                continue
+            depth += {"(": 1, ")": -1}.get(sql[k], 0)
+            k += 1
+        inner = sql[j + 5 : k - 1]
+        m = _AS_DOUBLE_TAIL.search(inner)
+        embedding_ctx = "embedding" in inner.lower() or any(
+            o < j < c_ and "embedding" in lower[o:c_] for o, c_ in spans if o < j
+        )
+        if m and not embedding_ctx:
+            expr = _ref_roundtrip_double_casts(inner[: m.start()])
+            out.append(sql[i:j])
+            out.append(f"CAST(CAST({expr} AS VARCHAR) AS DOUBLE)")
+            i = k
+        elif embedding_ctx:
+            out.append(sql[i:k])
+            i = k
+        else:
+            out.append(sql[i : j + 5])
+            i = j + 5
+
+
+def _random_sql(rng, depth: int = 0) -> str:
+    """Small random SQL expression: nested funcalls with and without
+    ``embedding``, grouping parens, double and non-double casts, string
+    literals (some holding parens or cast text) and line comments."""
+    leaves = [
+        "x", "rev", "embedding", "Embedding", "e.embedding", "1.5", "42",
+        "'a(b'", "'CAST(z AS DOUBLE)'", "'it''s )'", '"embedding"',
+        "NULL", "v -> v",
+    ]
+    if depth >= 4 or rng.random() < 0.25:
+        return rng.choice(leaves)
+    kind = rng.randrange(7)
+    a = _random_sql(rng, depth + 1)
+    if kind == 0:
+        return f"CAST({a} AS {rng.choice(['DOUBLE', 'double', 'BIGINT', 'VARCHAR'])})"
+    if kind == 1:
+        fn = rng.choice(["list_transform", "sum", "coalesce", "f_embedding", "abs"])
+        args = [a] + [_random_sql(rng, depth + 1) for _ in range(rng.randrange(2))]
+        return f"{fn}({', '.join(args)})"
+    if kind == 2:
+        return f"({a} + {_random_sql(rng, depth + 1)})"
+    if kind == 3:
+        return f"{a} -- CAST(c AS DOUBLE) ({rng.choice(['', 'embedding'])}\n"
+    if kind == 4:
+        return f"cast({a} as double)"
+    if kind == 5:
+        return f"BROADCAST({a} AS DOUBLE)"
+    return f"SELECT {a}, {_random_sql(rng, depth + 1)} FROM t"
+
+
+def test_double_cast_roundtrip_matches_reference_on_random_sql():
+    """The linear-time embedding-span filter must rewrite exactly like
+    the original per-cast span scan, over randomized nestings of
+    funcalls, casts, literals and comments."""
+    import random
+
+    from dockerized_data_pipeline_spark.plans.registry import (
+        roundtrip_double_casts,
+    )
+
+    rng = random.Random(20240131)
+    rewritten = 0
+    for _ in range(5000):
+        sql = _random_sql(rng)
+        got = roundtrip_double_casts(sql)
+        assert got == _ref_roundtrip_double_casts(sql), sql
+        rewritten += got != sql
+    assert rewritten > 500  # the generator really exercises the rewrite
+
+
+def test_plans_import_is_fast():
+    """Registering every oracle rewrites its double casts eagerly; the
+    rewrite must stay linear so every process's package import is cheap
+    (it was ~100 s when the exemption check re-sliced every funcall span
+    per cast)."""
+    import os
+    import subprocess
+    import sys
+    import time
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    t0 = time.perf_counter()
+    subprocess.run(
+        [sys.executable, "-c", "import dockerized_data_pipeline_spark.plans"],
+        cwd=repo, check=True, timeout=300,
+    )
+    assert time.perf_counter() - t0 < 30

@@ -22,10 +22,11 @@ A fourth variant, "salted (known)", passes the hot-key set in directly
 (the table-statistics case) and skips the detection aggregate.
 
 For each variant: wall time, plus the worst max/median executor task
-time over the variant's substantive stages (Spark REST taskSummary; the
-straggler factor). The salted path must show max/median <= 4 -- the
-no-straggler criterion asserted by tests/test_skew_windows.py's
-partition-spread regression and re-checked here on real task times.
+time over the variant's substantive stages (the status store's task
+summary, session.task_quantiles; the straggler factor). The salted path
+must show max/median <= 4 -- the no-straggler criterion asserted by
+tests/test_skew_windows.py's partition-spread regression and re-checked
+here on real task times.
 
 Run: python tools/skew_probe.py [n_rows] [alpha]
      (defaults 4,000,000 rows, alpha 1.1 ~ 17% hot key; alpha 1.5 ~ 39%)
@@ -37,7 +38,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -80,65 +80,51 @@ def dim_table(spark):
     )
 
 
-def _rest(url: str):
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.loads(r.read())
-
-
 def worst_stage_task_skew(spark, first_stage_after: int):
     """(max_ms, median_ms, n_tasks, stage_id) of the SUBSTANTIVE stage
     with the worst max/median task-time ratio among stages newer than
     the watermark. Substantive = >= 8 tasks and total executor run time
     >= 20% of the variant's heaviest stage (tiny control stages have
     noisy medians and are not where stragglers live)."""
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    stages = _rest(f"{base}/api/v1/applications/{app_id}/stages?status=complete")
-    new = [s for s in stages if s["stageId"] >= first_stage_after]
+    from dockerized_data_pipeline_spark.session import (
+        completed_stages,
+        task_quantiles,
+    )
+
+    new = completed_stages(spark, first_stage_after)
     if not new:
         return None
-    top_total = max(s.get("executorRunTime", 0) for s in new)
+    top_total = max(s.executorRunTime() for s in new)
     worst = None
     for s in new:
-        if s.get("numCompleteTasks", 0) < 8:
+        if s.numCompleteTasks() < 8:
             continue
-        if s.get("executorRunTime", 0) < 0.2 * top_total:
+        if s.executorRunTime() < 0.2 * top_total:
             continue
-        q = _rest(
-            f"{base}/api/v1/applications/{app_id}/stages/{s['stageId']}/"
-            f"{s['attemptId']}/taskSummary?quantiles=0.0,0.5,1.0"
-        )
-        mx, med = q["executorRunTime"][2], q["executorRunTime"][1]
+        d = task_quantiles(spark, s)
+        if d is None:  # evicted from the store
+            continue
+        mx, med = d.executorRunTime().apply(2), d.executorRunTime().apply(1)
         factor = mx / med if med else float("inf")
         if worst is None or factor > worst[0]:
-            worst = (factor, mx, med, s["numCompleteTasks"], s["stageId"])
+            worst = (factor, mx, med, s.numCompleteTasks(), s.stageId())
     if worst is None:
         return None
     return worst[1], worst[2], worst[3], worst[4]
 
 
-def median_shuffle_read_bytes(spark, first_stage_after: int):
-    """Median per-task shuffle-read bytes of the heaviest shuffle-read
-    stage newer than the watermark -- the partition stat the tuned AQE
-    profile scales its thresholds from. Delegates to the engine helper
-    (session.measured_median_shuffle_bytes) so probe and production
-    derive the number identically."""
-    from dockerized_data_pipeline_spark.session import (
-        measured_median_shuffle_bytes,
-    )
-
-    return measured_median_shuffle_bytes(spark, first_stage_after)
-
-
 def run_variant(spark, name: str, build, conf: dict):
     from pyspark.sql import functions as F
 
+    from dockerized_data_pipeline_spark.session import (
+        completed_stages,
+        measured_median_shuffle_bytes,
+    )
+
     old = {k: spark.conf.get(k) for k in conf}
     # stage-id watermark: only stages newer than this belong to the variant
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    done = _rest(f"{base}/api/v1/applications/{app_id}/stages")
-    next_stage = max((s["stageId"] for s in done), default=-1) + 1
+    done = completed_stages(spark)
+    next_stage = max((s.stageId() for s in done), default=-1) + 1
     try:
         for k, v in conf.items():
             spark.conf.set(k, v)
@@ -156,7 +142,7 @@ def run_variant(spark, name: str, build, conf: dict):
     skew = worst_stage_task_skew(spark, next_stage)
     mx, med, ntasks, stage_id = skew if skew else (0, 0, 0, -1)
     factor = (mx / med) if med else float("inf")
-    shuffle_med = median_shuffle_read_bytes(spark, next_stage)
+    shuffle_med = measured_median_shuffle_bytes(spark, next_stage)
     print(
         f"{name:>14}: wall {wall:6.2f}s  rows {n}  worst-stage task "
         f"max/median {mx:.0f}/{med:.0f} ms = {factor:.1f}x "
@@ -180,7 +166,6 @@ def main():
     spark = get_session(
         "skew-probe",
         extra_conf={
-            "spark.ui.enabled": "true",
             # force a real shuffle join: at 100 TB the dim of a skewed
             # join often exceeds broadcast size -- that is the regime
             # where skew matters at all
@@ -206,9 +191,9 @@ def main():
         ),
     ]
     # Self-derived profile (VERDICT r5 item 8): auto_skew_profile reads the
-    # REST taskSummary of the heaviest shuffle so far -- the plain run's
-    # join read, the same stat the hand-fed path below is given -- so the
-    # two profiles must be identical and their runs equivalent. Derived
+    # status-store task summary of the heaviest shuffle so far -- the plain
+    # run's join read, the same stat the hand-fed path below is given -- so
+    # the two profiles must be identical and their runs equivalent. Derived
     # HERE, before the AQE variant runs, because AQE's coalesced stages
     # would otherwise compete for "heaviest shuffle stage". Measured from
     # the PLAIN RUN'S stage watermark (not 0) so both paths see the

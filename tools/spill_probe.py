@@ -14,9 +14,9 @@ drives that assumption:
    happens (spill files), never WHAT comes out.
 3. A synthetic wide sort (range -> xxhash64 -> global sort in 2
    partitions, ~30M rows) runs in the same constrained child and MUST
-   report diskBytesSpilled > 0 via the REST stage metrics -- proving the
-   probe would actually see a spill, so "queries spilled 0 bytes" is a
-   measurement, not a blind spot.
+   report diskBytesSpilled > 0 in the status-store stage metrics --
+   proving the probe would actually see a spill, so "queries spilled 0
+   bytes" is a measurement, not a blind spot.
 
 Memory floor: all five queries complete and hash-match at 1g driver heap
 at sf0.1 (documented in README); the synthetic sort spills and completes.
@@ -59,26 +59,17 @@ def rows_hash(rows) -> str:
 
 
 def spill_totals(spark, first_stage_after: int = 0) -> dict:
-    """Sum memory/disk spill bytes over completed stages via REST."""
-    import urllib.request
+    """Sum memory/disk spill bytes over completed stages (status store)."""
+    from dockerized_data_pipeline_spark.session import completed_stages
 
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return {"memoryBytesSpilled": -1, "diskBytesSpilled": -1}
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app_id}/stages?status=complete", timeout=10
-    ) as r:
-        stages = json.loads(r.read())
-    mem = sum(s.get("memoryBytesSpilled", 0) for s in stages
-              if s["stageId"] >= first_stage_after)
-    disk = sum(s.get("diskBytesSpilled", 0) for s in stages
-               if s["stageId"] >= first_stage_after)
-    return {"memoryBytesSpilled": mem, "diskBytesSpilled": disk}
+    stages = completed_stages(spark, first_stage_after)
+    return {
+        "memoryBytesSpilled": sum(s.memoryBytesSpilled() for s in stages),
+        "diskBytesSpilled": sum(s.diskBytesSpilled() for s in stages),
+    }
 
 
 def child_main(sf_dir: str, mem: str) -> int:
-    os.environ["SPARK_GRAFT_UI"] = "1"  # REST metrics source
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = mem
     # 8 task slots: the probe models "little memory PER CORE" (1g/8 =
     # ~16 MB execution memory per task after Spark's fractions), not
