@@ -80,7 +80,7 @@ def _with_assignment(df: DataFrame, vec_col: str, centroids: list[list[float]]) 
 def _malformed(vec_col: str, dim: int) -> ValueError:
     return ValueError(
         f"kmeans: every {vec_col!r} vector must have {dim} non-null "
-        "elements (found a null element or a ragged vector)"
+        "elements (found a null element or a ragged or empty vector)"
     )
 
 
@@ -124,13 +124,27 @@ def kmeans_fit(
     # each Lloyd's iteration is one cached-columnar scan instead of
     # scan+exchange -- the exact shape the module docstring promises at
     # 100 TB.
+    #
+    # The fit (seeding and the Lloyd loop) runs in a clone of the session
+    # (session.isolated_session) with AQE off: its per-round queries are fixed-shape control
+    # aggregates over a k x dim keyspace, where AQE's per-exchange
+    # QueryStage materialization adds 2 driver round trips per round and
+    # has nothing to improve (no skew, nothing to coalesce) -- measured
+    # ~2.4x per-round latency at sf0.1. AQE is a physical-planning
+    # feature, so results are unchanged; the caller's session, and every
+    # query other threads run on it, keeps AQE on.
     from ..catalog import FOLD_BYTES_PER_TASK, spread_input
+    from ..session import isolated_session
 
     vecs = spread_input(
         df.select(F.col(id_col), F.col(vec_col)), FOLD_BYTES_PER_TASK
     ).persist()
     try:
-        return _kmeans_fit_cached(vecs, id_col, vec_col, k, iterations)
+        loop = isolated_session(df.sparkSession, kmeans_vecs=vecs)
+        loop.conf.set("spark.sql.adaptive.enabled", "false")
+        return _kmeans_fit_cached(
+            loop.table("kmeans_vecs"), id_col, vec_col, k, iterations
+        )
     finally:
         vecs.unpersist()
 
@@ -138,8 +152,6 @@ def kmeans_fit(
 def _kmeans_fit_cached(
     df: DataFrame, id_col: str, vec_col: str, k: int, iterations: int
 ) -> list[list[float]]:
-    from ..session import scoped_sql_conf
-
     centroids = seed_centroids(df, id_col, vec_col, k)
     if not centroids:
         return []
@@ -159,40 +171,40 @@ def _kmeans_fit_cached(
     # before. Addend sets per (cluster, pos) are identical and decimal
     # addition is associative, so every sum -- and hence every centroid --
     # is bit-identical to the old plan's (verified, 3 iterations).
-    # AQE is scoped OFF for the loop: see session.scoped_sql_conf.
-    with scoped_sql_conf(df.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
-        for _ in range(iterations):
-            assigned = _with_assignment(
-                df.select(F.col(vec_col).alias("v")), "v", centroids
+    for _ in range(iterations):
+        assigned = _with_assignment(
+            df.select(F.col(vec_col).alias("v")), "v", centroids
+        )
+        sums = (
+            # _outer: an EMPTY vector yields one (NULL, NULL) row instead
+            # of vanishing, so it is rejected below like a ragged one
+            assigned.select(
+                "cluster_id", F.posexplode_outer("v").alias("pos_", "x_")
             )
-            sums = (
-                assigned.select(
-                    "cluster_id", F.posexplode("v").alias("pos_", "x_")
-                )
-                .groupBy("cluster_id", "pos_")
-                .agg(
-                    F.count("x_").alias("n"),
-                    F.expr(f"sum(cast(x_ as {_ACC})) AS s"),
-                )
-                .collect()
+            .groupBy("cluster_id", "pos_")
+            .agg(
+                F.count("x_").alias("n"),
+                F.expr(f"sum(cast(x_ as {_ACC})) AS s"),
             )
-            new = [list(c) for c in centroids]
-            comps: dict[int, list] = {}
-            for r in sums:
-                if r.pos_ >= dim:
-                    raise _malformed(vec_col, dim)
-                comps.setdefault(r.cluster_id, [None] * dim)[r.pos_] = (r.s, r.n)
-            for cid, parts in comps.items():
-                # a null element or a ragged vector has no distance to any
-                # centroid (cluster_id NULL) and shows up as a missing
-                # position or unequal non-null counts across positions
-                if cid is None or None in parts:
-                    raise _malformed(vec_col, dim)
-                counts = {n for _, n in parts}
-                if len(counts) != 1 or 0 in counts:
-                    raise _malformed(vec_col, dim)
-                new[cid] = [float(s) / n for (s, n) in parts]
-            centroids = new
+            .collect()
+        )
+        new = [list(c) for c in centroids]
+        comps: dict[int, list] = {}
+        for r in sums:
+            if r.pos_ is None or r.pos_ >= dim:
+                raise _malformed(vec_col, dim)
+            comps.setdefault(r.cluster_id, [None] * dim)[r.pos_] = (r.s, r.n)
+        for cid, parts in comps.items():
+            # a null element or a ragged vector has no distance to any
+            # centroid (cluster_id NULL) and shows up as a missing
+            # position or unequal non-null counts across positions
+            if cid is None or None in parts:
+                raise _malformed(vec_col, dim)
+            counts = {n for _, n in parts}
+            if len(counts) != 1 or 0 in counts:
+                raise _malformed(vec_col, dim)
+            new[cid] = [float(s) / n for (s, n) in parts]
+        centroids = new
     return centroids
 
 

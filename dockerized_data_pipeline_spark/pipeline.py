@@ -10,7 +10,8 @@ Engine re-expression -- one declarative job, not a per-symbol loop:
       -> one DataFrame of (symbol, payload)
       -> parse_timeseries (from_json/explode/cast, observe quality counters)
       -> stamp created_at (DDL DEFAULT CURRENT_TIMESTAMP analog)
-      -> merge_upsert_path keyed (symbol, timestamp), newest-last_refreshed
+      -> merge_upsert_partitioned keyed (symbol, timestamp), rewriting only
+         the symbol partitions present in the tick; newest-last_refreshed
          wins, preserving created_at/time_zone on update
 
 The per-symbol UNION-loop becomes a single partition-parallel plan; retry &
@@ -27,7 +28,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
-from .operators.merge import merge_upsert_partitioned, merge_upsert_path
+from .operators.merge import merge_upsert_partitioned
 from .sources.http import Transport, fetch_payloads, payloads_to_df
 from .sources.parse import parse_timeseries
 
@@ -63,7 +64,6 @@ def ingest(
     as_of=None,
     logs_path: str | None = None,
     metadata_path: str | None = None,
-    partition_by_symbol: bool = True,
     sleep=None,
 ) -> IngestSummary:
     """Run one ingest tick: fetch -> parse -> MERGE into target_path.
@@ -93,28 +93,17 @@ def ingest(
         parsed = parse_timeseries(payload_df, observation=obs)
         created = F.lit(as_of).cast("timestamp") if as_of else F.current_timestamp()
         batch = parsed.withColumn("created_at", created.cast("timestamp_ntz"))
-        if partition_by_symbol:
-            # scale path: only the symbols present in this tick rewrite
-            merge_upsert_partitioned(
-                spark,
-                target_path,
-                batch,
-                keys=MERGE_KEYS,
-                partition_col="symbol",
-                update_cols=UPDATE_COLS,
-                preserve_cols=PRESERVE_COLS,
-                batch_order_by=["last_refreshed"],
-            )
-        else:
-            merge_upsert_path(
-                spark,
-                target_path,
-                batch,
-                keys=MERGE_KEYS,
-                update_cols=UPDATE_COLS,
-                preserve_cols=PRESERVE_COLS,
-                batch_order_by=["last_refreshed"],
-            )
+        # only the symbols present in this tick rewrite
+        merge_upsert_partitioned(
+            spark,
+            target_path,
+            batch,
+            keys=MERGE_KEYS,
+            partition_col="symbol",
+            update_cols=UPDATE_COLS,
+            preserve_cols=PRESERVE_COLS,
+            batch_order_by=["last_refreshed"],
+        )
         summary.quality = dict(obs.get)
         summary.rows_parsed = summary.quality.get("rows_total", 0)
 

@@ -11,10 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, scoped_views
+from ..catalog import load_table
 from ..operators.asof import asof_join
 from ..operators.rangejoin import range_join_bucketed
 from ..operators.sessionize import sessionize
+from ..session import isolated_session
 from .registry import query
 
 
@@ -191,15 +192,15 @@ def agg_pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL entry point (SURVEY section 3.2): the same Catalyst pipeline via
     spark.sql over a registered view."""
-    with scoped_views(spark, lineitem=load_table(spark, sf_dir, "lineitem")):
-        return spark.sql(
-            """
-            SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(12,4))) AS DOUBLE) AS sum_qty
-            FROM lineitem
-            GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-            """
-        )
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return isolated_session(spark, lineitem=lineitem).sql(
+        """
+        SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
+               CAST(SUM(CAST(l_quantity AS DECIMAL(12,4))) AS DOUBLE) AS sum_qty
+        FROM lineitem
+        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+        """
+    )
 
 
 @query(
@@ -573,20 +574,20 @@ def rec_hierarchy_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical closure. Each recursion level is one join against the
     previous frontier -- the same distributed shape as the iterative
     operators, but expressed declaratively."""
-    with scoped_views(spark, customer=load_table(spark, sf_dir, "customer")):
-        return spark.sql(
-            """
-            WITH RECURSIVE h(custkey, depth) AS (
-              SELECT c_custkey, 0 FROM customer WHERE c_custkey = 1
-              UNION ALL
-              SELECT c.c_custkey, h.depth + 1
-              FROM customer c JOIN h ON c.c_custkey DIV 2 = h.custkey
-            )
-            SELECT depth, COUNT(*) AS n_nodes,
-                   MIN(custkey) AS min_key, MAX(custkey) AS max_key
-            FROM h GROUP BY depth
-            """
+    customer = load_table(spark, sf_dir, "customer")
+    return isolated_session(spark, customer=customer).sql(
+        """
+        WITH RECURSIVE h(custkey, depth) AS (
+          SELECT c_custkey, 0 FROM customer WHERE c_custkey = 1
+          UNION ALL
+          SELECT c.c_custkey, h.depth + 1
+          FROM customer c JOIN h ON c.c_custkey DIV 2 = h.custkey
         )
+        SELECT depth, COUNT(*) AS n_nodes,
+               MIN(custkey) AS min_key, MAX(custkey) AS max_key
+        FROM h GROUP BY depth
+        """
+    )
 
 
 @query(
@@ -606,20 +607,17 @@ def lateral_top2_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFr
     physical plan is the same distributed shape as window_topk, not a
     per-customer loop; the deterministic ORDER BY tiebreak keeps both
     engines' row picks identical."""
-    with scoped_views(
-        spark,
-        customer=load_table(spark, sf_dir, "customer"),
-        orders=load_table(spark, sf_dir, "orders"),
-    ):
-        return spark.sql(
-            """
-            SELECT c_custkey, t.o_orderkey, t.o_totalprice
-            FROM customer,
-            LATERAL (SELECT o_orderkey, o_totalprice FROM orders
-                     WHERE o_custkey = c_custkey
-                     ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-            """
-        )
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    return isolated_session(spark, customer=customer, orders=orders).sql(
+        """
+        SELECT c_custkey, t.o_orderkey, t.o_totalprice
+        FROM customer,
+        LATERAL (SELECT o_orderkey, o_totalprice FROM orders
+                 WHERE o_custkey = c_custkey
+                 ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
+        """
+    )
 
 
 @query(

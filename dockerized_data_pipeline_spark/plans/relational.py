@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, scoped_views
+from ..catalog import load_table
+from ..session import isolated_session
 from .registry import query
 
 # Tight decimal width keeps decimal products within precision 38 (exact in
@@ -879,7 +880,7 @@ _FRONTDOOR_SQL = """
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
            CAST(COUNT(*) AS BIGINT) AS count_order
-    FROM {lineitem}
+    FROM lineitem
     WHERE l_shipdate <= DATE '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
 """
@@ -887,7 +888,7 @@ _FRONTDOOR_SQL = """
 
 @query(
     "sql_frontdoor_pricing",
-    oracle=_FRONTDOOR_SQL.format(lineitem="lineitem"),
+    oracle=_FRONTDOOR_SQL,
 )
 def sql_frontdoor_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL front door: the IDENTICAL dialect-neutral SQL text runs
@@ -895,10 +896,8 @@ def sql_frontdoor_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle -- proving a user can bring plain ANSI SQL to this engine, not
     just the DataFrame API, and Catalyst still plans it (pushdown, partial
     aggregation) exactly like the DataFrame q1."""
-    with scoped_views(
-        spark, ddp_lineitem_frontdoor=load_table(spark, sf_dir, "lineitem")
-    ):
-        return spark.sql(_FRONTDOOR_SQL.format(lineitem="ddp_lineitem_frontdoor"))
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return isolated_session(spark, lineitem=lineitem).sql(_FRONTDOOR_SQL)
 
 
 @query(

@@ -29,14 +29,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import load_table, scoped_views
+from ..catalog import load_table
+from ..session import isolated_session
 from .registry import AS_OF, query
 
 # shared view definitions -- ONE dialect-neutral text per view, used as a
 # Spark temp view and as the oracle's CTE body
-_STOCK_DATA_VIEW = (
-    "SELECT event_type AS symbol, ts AS `timestamp` FROM {events}"
-)
+_STOCK_DATA_VIEW = "SELECT event_type AS symbol, ts AS `timestamp` FROM events"
 _PIPELINE_LOGS_VIEW = """
     SELECT event_type AS dag_id,
            'ingest_stock_data' AS task_id,
@@ -44,33 +43,29 @@ _PIPELINE_LOGS_VIEW = """
              AS status,
            CAST(event_id % 500 AS BIGINT) AS records_processed,
            {created_at} AS created_at
-    FROM {events}
+    FROM events
 """
 
 
-def _doc_views(spark: SparkSession, sf_dir: str):
-    """Scoped stock_data/pipeline_logs views for the verbatim doc-SQL
-    queries; dropped as soon as the query DataFrame is analyzed so no
-    session state outlives the query function."""
-    events = load_table(spark, sf_dir, "events")
-    with scoped_views(spark, ddp_sqltext_events=events):
-        stock = spark.sql(_STOCK_DATA_VIEW.format(events="ddp_sqltext_events"))
-        logs = spark.sql(
-            _PIPELINE_LOGS_VIEW.format(
-                events="ddp_sqltext_events",
-                # unique per row (event_id is the PK), so DESC LIMIT n is total
-                created_at="timestampadd(MICROSECOND, event_id, ts)",
-            )
+def _doc_views(spark: SparkSession, sf_dir: str) -> SparkSession:
+    """A clone of ``spark`` (session.isolated_session) holding the
+    stock_data/pipeline_logs views of the verbatim doc-SQL queries."""
+    clone = isolated_session(spark, events=load_table(spark, sf_dir, "events"))
+    clone.sql(_STOCK_DATA_VIEW).createOrReplaceTempView("stock_data")
+    # created_at is unique per row (event_id is the PK), so DESC LIMIT n
+    # is total
+    clone.sql(
+        _PIPELINE_LOGS_VIEW.format(
+            created_at="timestampadd(MICROSECOND, event_id, ts)"
         )
-    return scoped_views(spark, stock_data=stock, pipeline_logs=logs)
+    ).createOrReplaceTempView("pipeline_logs")
+    return clone
 
 
 def _oracle(text: str) -> str:
     """The same verbatim text over DuckDB, views supplied as CTEs."""
-    stock = _STOCK_DATA_VIEW.format(events="events").replace("`", '"')
-    logs = _PIPELINE_LOGS_VIEW.format(
-        events="events", created_at="ts + to_microseconds(event_id)"
-    )
+    stock = _STOCK_DATA_VIEW.replace("`", '"')
+    logs = _PIPELINE_LOGS_VIEW.format(created_at="ts + to_microseconds(event_id)")
     return f"WITH stock_data AS ({stock}), pipeline_logs AS ({logs}) {text}"
 
 
@@ -81,8 +76,7 @@ def _sqltext(name: str, text: str, oracle_text: str | None = None):
 
     @query(name, oracle=_oracle(oracle_text or text))
     def run(spark: SparkSession, sf_dir: str, _text=text) -> DataFrame:
-        with _doc_views(spark, sf_dir):
-            return spark.sql(_text)
+        return _doc_views(spark, sf_dir).sql(_text)
 
     run.__name__ = name
     run.__qualname__ = name

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, scoped_views
+from ..catalog import load_table
+from ..session import isolated_session
 from .registry import query
 from .relational import _REVENUE_SQL
 
@@ -165,16 +166,16 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q17_near_brand_ceiling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with scoped_views(spark, part=load_table(spark, sf_dir, "part")):
-        return spark.sql(
-            """
-            SELECT p_partkey, p_brand, p_retailprice
-            FROM part p
-            WHERE p_retailprice > (
-              SELECT 0.99 * MAX(p2.p_retailprice) FROM part p2 WHERE p2.p_brand = p.p_brand
-            )
-            """
+    part = load_table(spark, sf_dir, "part")
+    return isolated_session(spark, part=part).sql(
+        """
+        SELECT p_partkey, p_brand, p_retailprice
+        FROM part p
+        WHERE p_retailprice > (
+          SELECT 0.99 * MAX(p2.p_retailprice) FROM part p2 WHERE p2.p_brand = p.p_brand
         )
+        """
+    )
 
 
 # Q10 shape: returned-item revenue per customer, top-k with dims joined in.
@@ -355,22 +356,19 @@ def q22_rich_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q4_orders_with_late_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with scoped_views(
-        spark,
-        orders=load_table(spark, sf_dir, "orders"),
-        lineitem=load_table(spark, sf_dir, "lineitem"),
-    ):
-        return spark.sql(
-            """
-            SELECT o_orderpriority, COUNT(*) AS order_count
-            FROM orders
-            WHERE EXISTS (
-              SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-            )
-            GROUP BY o_orderpriority
-            """
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return isolated_session(spark, orders=orders, lineitem=lineitem).sql(
+        """
+        SELECT o_orderpriority, COUNT(*) AS order_count
+        FROM orders
+        WHERE EXISTS (
+          SELECT 1 FROM lineitem
+          WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate + INTERVAL 60 DAY
         )
+        GROUP BY o_orderpriority
+        """
+    )
 
 
 # Q7 shape: multi-way join with two roles for the same dimension (supplier

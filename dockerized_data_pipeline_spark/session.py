@@ -12,7 +12,7 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_cpus() -> int:
@@ -148,78 +148,27 @@ def auto_skew_profile(
     return tuned_skew_conf(med, factor)
 
 
-import threading
-from contextlib import contextmanager
+def isolated_session(spark: SparkSession, **views: DataFrame) -> SparkSession:
+    """A clone of ``spark`` for ONE query, with each ``views`` DataFrame
+    bound as a temp view in the clone only.
 
-# scoped_sql_conf bookkeeping: SQL confs are SESSION-global, and iterative
-# operators (pq_train) run several fit loops from a thread pool -- two
-# unsynchronized set/restore pairs would race (B reads A's override as the
-# "original" and restores the override). A refcount per (session, key)
-# under one lock makes the scope reentrant and thread-safe: the FIRST
-# enter records the true original, the LAST exit restores it.
-_SCOPED_CONF_LOCK = threading.Lock()
-
-
-@contextmanager
-def scoped_sql_conf(spark: SparkSession, confs: dict[str, str]):
-    """Set runtime SQL confs for the duration of the block, restoring the
-    previous values (or unsetting) on exit; reentrant and thread-safe for
-    the SAME target value (nested scopes with conflicting values raise).
-
-    For iterative driver-loop operators (Lloyd's k-means, BPE merge rounds)
-    whose per-round queries are fixed-shape control aggregates over tiny
-    keyspaces, AQE's per-exchange QueryStage materialization adds 2 driver
-    round trips per round for nothing it can improve (no skew possible on a
-    k x dim keyspace, nothing useful to coalesce) -- measured ~2.4x per-round
-    latency at sf0.1. Scoping the flip keeps every other query planned with
-    AQE on. Values-only concern: AQE is a physical-planning feature, so
-    results are unchanged by construction."""
-    with _SCOPED_CONF_LOCK:
-        reg = getattr(spark, "_ddp_scoped_conf_state", None)
-        if reg is None:
-            reg = {}
-            spark._ddp_scoped_conf_state = reg
-        applied = []
-        try:
-            for k, v in confs.items():
-                ent = reg.get(k)
-                if ent is None:
-                    try:
-                        orig = spark.conf.get(k)
-                    except Exception:
-                        orig = None
-                    spark.conf.set(k, v)
-                    reg[k] = [1, orig, v]
-                elif ent[2] != v:
-                    raise ValueError(
-                        f"scoped_sql_conf: nested conflicting values for {k}: "
-                        f"active {ent[2]!r}, requested {v!r}"
-                    )
-                else:
-                    ent[0] += 1
-                applied.append(k)
-        except BaseException:
-            # partial entry: undo the keys this call already took
-            _release_scoped(spark, reg, applied)
-            raise
-    try:
-        yield
-    finally:
-        with _SCOPED_CONF_LOCK:
-            _release_scoped(spark, reg, confs)
-
-
-def _release_scoped(spark: SparkSession, reg: dict, keys) -> None:
-    """Drop one reference per key; the last one restores the original."""
-    for k in keys:
-        ent = reg[k]
-        ent[0] -= 1
-        if ent[0] == 0:
-            del reg[k]
-            if ent[1] is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, ent[1])
+    ``cloneSession`` copies the caller's runtime SQL conf, registered
+    ``QueryExecutionListener``s and temp views, and shares the
+    SparkContext and the table cache (a frame the caller persisted is
+    still read as ``InMemoryTableScan``). Views and conf set on the clone
+    never reach the caller's session, so queries on other threads keep
+    their catalog and conf, and nothing needs restoring when the query
+    is built or fails. (``newSession`` would drop the caller's conf
+    overrides and listeners.) DataFrames the clone returns stay bound to
+    it and run under its conf; analysis resolves view names eagerly, so
+    they are safe to combine with the caller's frames."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    rebind = spark.sparkContext._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    for name, df in views.items():
+        DataFrame(
+            rebind(clone._jsparkSession, df._jdf.logicalPlan()), clone
+        ).createOrReplaceTempView(name)
+    return clone
 
 
 def get_session(

@@ -34,6 +34,47 @@ def test_register_views_and_presence(spark, sf_dir):
             spark.catalog.dropTempView(name)
 
 
+def test_isolated_session_views_stay_in_the_clone(spark):
+    """Views bound by session.isolated_session exist in the clone only:
+    the caller's own view of the same name keeps its data, and a query
+    built in the clone keeps reading the bound frame after the clone is
+    dropped."""
+    from dockerized_data_pipeline_spark.session import isolated_session
+
+    spark.range(3).createOrReplaceTempView("iso_probe")
+    try:
+        q = isolated_session(spark, iso_probe=spark.range(10)).sql(
+            "SELECT COUNT(*) AS n FROM iso_probe"
+        )
+        assert spark.table("iso_probe").count() == 3
+        assert q.collect()[0].n == 10
+    finally:
+        spark.catalog.dropTempView("iso_probe")
+
+
+def test_sql_text_query_leaves_caller_catalog_untouched(spark, sf_dir, monkeypatch):
+    """While q4_orders_with_late_lines builds, the caller's catalog never
+    holds its common table names: each SQL-text query binds its views in
+    a session clone, not in the session other threads share."""
+    from pyspark.sql import SparkSession
+
+    from dockerized_data_pipeline_spark.plans import QUERIES
+
+    seen = []
+    sql = SparkSession.sql
+
+    def spy_sql(self, *args, **kwargs):
+        seen.append({t.name for t in spark.catalog.listTables()})
+        return sql(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", spy_sql)
+    df = QUERIES["q4_orders_with_late_lines"](spark, sf_dir)
+    monkeypatch.undo()
+    assert seen
+    assert all(not ({"orders", "lineitem"} & names) for names in seen), seen
+    assert df.count() > 0
+
+
 def test_create_table_ddl_analog(spark, tmp_path):
     loc = str(tmp_path / "stock_data")
     create_table_if_not_exists(spark, "stock_data", STOCK_DATA_SCHEMA, loc)

@@ -3,13 +3,13 @@
 The reference invites ad-hoc SQL concurrent with the pipeline
 (README.md:193-208 -- psql against the live Postgres while the DAG
 ingests). The Spark analog is many threads sharing ONE SparkSession:
-temp views are session-global, so the scoped_views registry must not
-cross-talk when two threads scope the same common name (``lineitem``)
--- possibly bound to DIFFERENT scale factors -- or drop a view while a
-sibling thread is mid-analysis. catalog._VIEW_REGISTRY_LOCK serializes
-analysis only; execution stays parallel.
+temp views and SQL confs are session-global, so two threads binding the
+same common name (``lineitem``) -- possibly to DIFFERENT scale factors
+-- must not cross-talk. Each query binds its views in its own clone of
+the session (session.isolated_session), so neither analysis nor
+execution is serialized.
 
-The soak runs the full 15-query headline set (plus every scoped_views
+The soak runs the full 15-query headline set (plus every view-binding
 consumer: spark.sql-text queries, the verbatim doc-SQL family, EXISTS /
 correlated-subquery SQL) from 8 threads against BOTH sf0.001 and
 sf0.01 simultaneously, with a streaming foreachBatch-merge ingest

@@ -63,32 +63,6 @@ def _payload(symbol):
     )
 
 
-def test_scoped_sql_conf_rolls_back_partial_entry(spark):
-    # a nested scope whose SECOND key conflicts raises before its body; the
-    # first key it already set must be undone, not left set and refcounted
-    from dockerized_data_pipeline_spark.session import scoped_sql_conf
-
-    def confs():
-        return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
-
-    with scoped_sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-        conf_before = confs()
-        state_before = {
-            k: list(v) for k, v in spark._ddp_scoped_conf_state.items()
-        }
-        with pytest.raises(ValueError, match="conflicting"):
-            with scoped_sql_conf(
-                spark,
-                {
-                    "spark.sql.shuffle.partitions": "3",
-                    "spark.sql.adaptive.enabled": "true",
-                },
-            ):
-                pass
-        assert confs() == conf_before
-        assert spark._ddp_scoped_conf_state == state_before
-
-
 def test_fetch_with_fake_transport_isolation_and_rate_limit(spark):
     calls, sleeps = [], []
 
@@ -528,18 +502,29 @@ def test_kmeans_and_semantic_dedup_tolerate_empty_corpus(spark):
 
 @pytest.mark.parametrize(
     "bad",
-    [[1.0, None, 0.5], [2.0, 1.0]],
-    ids=["null_element", "short_vector"],
+    [[1.0, None, 0.5], [2.0, 1.0], []],
+    ids=["null_element", "short_vector", "empty_vector"],
 )
 def test_kmeans_rejects_malformed_vectors(spark, bad):
-    """A vector with a null element or the wrong length has no defined
-    distance or mean; the fit must name the column instead of raising a
-    TypeError or silently shifting per-position means. The bad row is
-    checked both as a seed (k covers every row) and as a non-seed row
-    (seeds are the k smallest md5(id); the bad row has the largest)."""
+    """A vector with a null element, the wrong length or no elements has
+    no defined distance or mean; the fit must name the column instead of
+    raising a TypeError, silently shifting per-position means or
+    dropping the row. The bad row is checked both as a seed (k covers
+    every row) and as a non-seed row (seeds are the k smallest md5(id);
+    the bad row has the largest). A failing fit leaves no cached
+    projection, temp view or conf behind in the caller's session."""
     import hashlib
 
     from dockerized_data_pipeline_spark.operators.kmeans import kmeans_fit
+
+    def session_state():
+        return (
+            {r["key"]: r["value"] for r in spark.sql("SET").collect()},
+            {t.name for t in spark.catalog.listTables()},
+        )
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     bad_id = max(range(13), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
     rows = [
@@ -547,6 +532,48 @@ def test_kmeans_rejects_malformed_vectors(spark, bad):
         for i in range(13)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    state_before, rdds_before = session_state(), persisted()
     for k in (13, 2):
         with pytest.raises(ValueError, match="'embedding'"):
             kmeans_fit(df, "vec_id", "embedding", k=k, iterations=2)
+        assert session_state() == state_before
+        assert persisted() <= rdds_before
+
+
+def test_kmeans_loop_plans_without_aqe_in_its_own_session(spark, monkeypatch):
+    """The Lloyd loop runs in a clone of the caller's session with AQE off
+    there only: while the loop runs, the caller's session (which other
+    threads may be querying) still reads AQE on. Each round's aggregate
+    is a plain, non-adaptive plan (root HashAggregate) over the persisted
+    projection (InMemoryTableScan)."""
+    from dockerized_data_pipeline_spark.operators import kmeans as KM
+
+    rows = [(i, [float(i % 5), float(i % 3)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    frame_cls = type(df)  # the classic DataFrame, which defines collect
+    caller_aqe, loop_aqe, executed = [], [], []
+    assign, collect = KM._with_assignment, frame_cls.collect
+
+    def spy_assign(df, vec_col, centroids):
+        caller_aqe.append(spark.conf.get("spark.sql.adaptive.enabled"))
+        loop_aqe.append(df.sparkSession.conf.get("spark.sql.adaptive.enabled"))
+        return assign(df, vec_col, centroids)
+
+    def spy_collect(self):
+        rows = collect(self)
+        executed.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(KM, "_with_assignment", spy_assign)
+    monkeypatch.setattr(frame_cls, "collect", spy_collect)
+    KM.kmeans_fit(df, k=3, iterations=2)
+    monkeypatch.undo()
+
+    assert caller_aqe == ["true", "true"]
+    assert loop_aqe == ["false", "false"]
+    rounds = [p for p in executed if "pos_" in p]
+    assert len(rounds) == 2
+    for plan in rounds:
+        root = plan.splitlines()[0]
+        assert "AdaptiveSparkPlan" not in root and "HashAggregate" in root, root
+        assert "InMemoryTableScan" in plan

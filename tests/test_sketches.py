@@ -53,17 +53,15 @@ def test_approx_top_k_matches_exact_heavy_hitters(spark, sf_dir):
     sketch never evicts). Kept test-only: sketch merge order is not
     provably deterministic across partitionings, unlike HLL/GK."""
     from dockerized_data_pipeline_spark.catalog import load_table
-
-    from dockerized_data_pipeline_spark.catalog import scoped_views
+    from dockerized_data_pipeline_spark.session import isolated_session
 
     ev = load_table(spark, sf_dir, "events")
-    with scoped_views(spark, ev_topk=ev):
-        approx = {
-            r.item: r.n_est
-            for r in spark.sql(
-                "SELECT inline(approx_top_k(event_type, 5)) AS (item, n_est) FROM ev_topk"
-            ).collect()
-        }
+    approx = {
+        r.item: r.n_est
+        for r in isolated_session(spark, ev_topk=ev).sql(
+            "SELECT inline(approx_top_k(event_type, 5)) AS (item, n_est) FROM ev_topk"
+        ).collect()
+    }
     exact = {
         r.event_type: r.n
         for r in ev.groupBy("event_type").count().withColumnRenamed("count", "n").collect()

@@ -5,7 +5,9 @@ Spark's xxhash64 byte layout (plans/duckhash.py replays it in SQL),
 Spark-ML BRP-LSH's seed-42 random unit vectors (plans/mllsh.py),
 NormalizeFloatingNumbers' -0.0 canonicalization, ROLLUP-over-empty
 returning zero rows, sequence(1,0) descending, least/greatest NULL-skip,
-and DuckDB 1.0's CTE-inlining/LEAST semantics. A Spark or DuckDB
+DuckDB 1.0's CTE-inlining/LEAST semantics, and the two py4j internals
+session.isolated_session is built on (``cloneSession`` and
+``classic.Dataset.ofRows``). A Spark or DuckDB
 upgrade that changes ANY of these would otherwise surface as dozens of
 scattered oracle failures; this file makes the upgrade fail in ONE
 place with a migration note per pin.
@@ -199,3 +201,77 @@ def test_upper_sharp_s_full_vs_simple_case_mapping(spark):
     assert con.execute("SELECT UPPER('ß')").fetchone()[0] == "ẞ"
     assert con.execute("SELECT UPPER(REPLACE('ß', 'ß', 'ss'))").fetchone()[0] == "SS"
     con.close()
+
+
+class _CountingListener:
+    """py4j-implemented ``QueryExecutionListener`` (the shape of
+    perfbench's QueryListener): counts successful executions."""
+
+    def __init__(self) -> None:
+        self.calls = 0
+
+    def onSuccess(self, func_name, qe, duration_ns):  # noqa: N802 (JVM interface)
+        self.calls += 1
+
+    def onFailure(self, func_name, qe, exception):  # noqa: N802
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def test_clone_session_keeps_conf_and_listeners(spark):
+    """session.isolated_session clones with ``cloneSession()``: the clone
+    must inherit runtime conf overrides and registered listeners (which
+    ``newSession()`` drops), and a conf set on the clone must not reach
+    its parent. Both sessions here are clones, so nothing is set or
+    registered on the shared test session."""
+    from pyspark.java_gateway import ensure_callback_server_started
+    from pyspark.sql import SparkSession
+
+    sc = spark.sparkContext
+    ensure_callback_server_started(sc._gateway)
+    parent = SparkSession(sc, spark._jsparkSession.cloneSession())
+    parent.conf.set("spark.sql.shuffle.partitions", "3")
+    listener = _CountingListener()
+    parent._jsparkSession.listenerManager().register(listener)
+    n_listeners = len(parent._jsparkSession.listenerManager().listListeners())
+
+    clone = SparkSession(sc, parent._jsparkSession.cloneSession())
+    assert clone.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert len(clone._jsparkSession.listenerManager().listListeners()) == n_listeners
+    assert len(spark._jsparkSession.newSession().listenerManager().listListeners()) == 0
+    clone.range(3).collect()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert listener.calls >= 1
+
+    clone.conf.set("spark.sql.adaptive.enabled", "false")
+    assert parent.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_dataset_ofrows_rebinds_a_persisted_frame_to_its_cache(spark):
+    """session.isolated_session binds a caller's frame into the clone via
+    ``classic.Dataset.ofRows(clone, df.logicalPlan())``; the k-means loop
+    relies on the rebound frame still reading the persisted projection
+    (the cache manager is shared across sessions of one context)."""
+    from pyspark.sql import DataFrame, SparkSession
+
+    sc = spark.sparkContext
+    df = spark.range(50).selectExpr("id", "id % 3 AS g").persist()
+    try:
+        df.count()
+        clone = SparkSession(sc, spark._jsparkSession.cloneSession())
+        rebound = DataFrame(
+            sc._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                clone._jsparkSession, df._jdf.logicalPlan()
+            ),
+            clone,
+        )
+        agg = rebound.groupBy("g").count()
+        assert sorted(r["count"] for r in agg.collect()) == [16, 17, 17]
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+        assert agg.sparkSession is clone
+    finally:
+        df.unpersist()

@@ -41,10 +41,6 @@ FLAG_EXPONENT = 1.3
 RUNS = 3
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def ensure_dataset(spark, base: str, tag: str, sf: float, files: int) -> str:
     from gen_scale import generate
 
@@ -74,7 +70,7 @@ def aqe_summary(df) -> dict:
 def main() -> int:
     base = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft_scale"
     sys.path.insert(0, os.path.join(REPO, "tools"))
-    from bench import HEADLINE
+    from bench import HEADLINE, materialize, warm_up
 
     from dockerized_data_pipeline_spark import plans
     from dockerized_data_pipeline_spark.session import get_session
@@ -91,7 +87,7 @@ def main() -> int:
 
     # warm the scan + python-worker paths once per dataset
     for d in dirs:
-        materialize(spark.read.parquet(os.path.join(d, "lineitem.parquet")))
+        warm_up(spark, d)
 
     def timed(name: str, sf_dir: str) -> float:
         fn = plans.QUERIES[name]

@@ -18,12 +18,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import materialize, warm_up
 from dockerized_data_pipeline_spark import plans
 from dockerized_data_pipeline_spark.session import get_session
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -31,17 +28,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repeat = int(os.environ.get("SPARK_GRAFT_REPEAT", "3"))
     spark = get_session("ddp-time-queries")
-    materialize(spark.range(1_000_000).selectExpr("sum(id) as s"))
-    materialize(spark.read.parquet(os.path.join(sf_dir, "region.parquet")))
-
-    def _passthrough(it):
-        for pdf in it:
-            yield pdf
-
-    width = spark.sparkContext.defaultParallelism
-    materialize(
-        spark.range(width * 4).repartition(width).mapInPandas(_passthrough, "id long")
-    )
+    warm_up(spark, sf_dir)
     out: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
 
