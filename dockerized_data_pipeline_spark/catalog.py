@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import local_frame
+
 TABLES = (
     "region",
     "nation",
@@ -237,7 +239,7 @@ def create_table_if_not_exists(
     """
     if os.path.exists(location) and os.listdir(location):
         return
-    empty = spark.createDataFrame([], schema)
+    empty = local_frame(spark, [], schema)
     writer = empty.write.mode("ignore")
     if partition_by:
         writer = writer.partitionBy(*partition_by)

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 END = "</w>"  # end-of-word marker: merges never cross word boundaries
 
 
@@ -233,7 +235,8 @@ def bpe_train(
 
 
 def bpe_merges_df(spark, merges: list[tuple[str, str, int]]) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, a, b, n) for i, (a, b, n) in enumerate(merges)],
         "rank int, left string, right string, pair_count long",
     )

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _ACC = "decimal(28,10)"
 
 
@@ -49,8 +51,10 @@ def _with_assignment(df: DataFrame, vec_col: str, centroids: list[list[float]]) 
     step -- a 2^k expression-tree blowup that took this operator from
     ~2s to ~20s at k=8 before this shape.
 
-    The codebook travels as broadcast DATA (a 1-row array<array<double>>
-    frame cross-joined in), not as a plan literal (r9): with literals,
+    The codebook travels as broadcast DATA, not as a plan literal (r9):
+    a 1-row array<array<double>> ``LocalRelation`` built by
+    ``session.local_frame`` (an Arrow batch, so no Python worker starts
+    per round) and cross-joined in. With literals,
     every Lloyd's iteration embeds NEW constants in the stage, so
     whole-stage codegen recompiles per iteration (~5s each at k=16 --
     the dominant cost of the semantic-dedup family, measured identical
@@ -59,8 +63,8 @@ def _with_assignment(df: DataFrame, vec_col: str, centroids: list[list[float]]) 
     6-9s/iter -> ~2s/iter measured) and the per-row IEEE arithmetic is
     unchanged (verified bit-equal). This is also the honest 100 TB
     shape: the codebook is a broadcast variable, not query text."""
-    spark = df.sparkSession
-    cb = spark.createDataFrame(
+    cb = local_frame(
+        df.sparkSession,
         [([[float(x) for x in c] for c in centroids],)],
         "__cb array<array<double>>",
     )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, literal_vector
+from ..session import local_frame
 
 
 def cosine_topk(
@@ -129,8 +130,8 @@ def ivf_assignments(
     norms = [
         math.sqrt(sum((float(x) * float(x) for x in c), 0.0)) for c in centroids
     ]
-    spark = df.sparkSession
-    cb = spark.createDataFrame(
+    cb = local_frame(
+        df.sparkSession,
         [([[float(x) for x in c] for c in centroids],
           [float(n) for n in norms])],
         "__cb array<array<double>>, __cn array<double>",

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators.merge import merge_upsert_path
+from .session import local_frame
 
 PIPELINE_LOGS_SCHEMA = T.StructType(
     [
@@ -64,7 +65,7 @@ def append_run_log(
             execution_date,
         )
     ]
-    spark.createDataFrame(row, PIPELINE_LOGS_SCHEMA).coalesce(1).write.mode(
+    local_frame(spark, row, PIPELINE_LOGS_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(logs_path)
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .config import PipelineConfig
 from .operators.merge import merge_upsert_partitioned
+from .session import local_frame
 from .sources.http import Transport, fetch_payloads, payloads_to_df
 from .sources.parse import parse_timeseries
 
@@ -135,6 +136,6 @@ def ingest(
         upsert_stock_metadata(
             spark,
             metadata_path,
-            spark.createDataFrame(meta_rows, STOCK_METADATA_SCHEMA),
+            local_frame(spark, meta_rows, STOCK_METADATA_SCHEMA),
         )
     return summary

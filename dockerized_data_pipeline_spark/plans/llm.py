@@ -17,6 +17,7 @@ from ..functions import text as TX
 from ..functions.vectors import cosine
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
+from ..session import local_frame
 from .registry import query
 
 _STOP_SQL = "('" + "','".join(TX.STOPWORDS) + "')"
@@ -2197,8 +2198,8 @@ def x3_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         hit = exact.join(approx, "vec_id", "left_semi").count()
         rows.append((n_probe, int(k), int(hit), int(hit * 1_000_000 // k)))
-    return spark.createDataFrame(
-        rows, "n_probe long, k long, hits long, recall_ppm long"
+    return local_frame(
+        spark, rows, "n_probe long, k long, hits long, recall_ppm long"
     )
 
 
@@ -2843,8 +2844,8 @@ def x8_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     avail = d.groupBy("source").agg(
         F.sum(TX.token_count(F.col("text"))).cast("bigint").alias("available_tokens")
     )
-    tgt = spark.createDataFrame(
-        sorted(_MIX_TARGET_PPM.items()), "source string, target_ppm bigint"
+    tgt = local_frame(
+        spark, sorted(_MIX_TARGET_PPM.items()), "source string, target_ppm bigint"
     )
     required = F.floor(F.lit(_MIX_BUDGET_TOKENS) * F.col("target_ppm") / 1_000_000).cast(
         "bigint"
@@ -2992,7 +2993,8 @@ def x3_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     full_top = topk(F.col("embedding"), q)
     trunc_top = topk(F.slice(F.col("embedding"), 1, _TRUNC_DIM), q[:_TRUNC_DIM])
     hits = full_top.join(trunc_top, "vec_id").count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(_TRUNC_DIM, 10, hits, hits * 1_000_000 // 10)],
         "trunc_dim bigint, k bigint, hits bigint, recall_ppm bigint",
     )

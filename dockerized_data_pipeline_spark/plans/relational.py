@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..session import isolated_session
+from ..session import isolated_session, local_frame
 from .registry import query
 
 # Tight decimal width keeps decimal products within precision 38 (exact in
@@ -863,7 +863,8 @@ def join_salted_hot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_join
 
     o = load_table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("O", "open"), ("F", "finished"), ("P", "pending")],
         "o_orderstatus string, status_label string",
     )
@@ -926,7 +927,8 @@ def join_partial_salted_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import hot_key_salted_join
 
     o = load_table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("O", "open"), ("F", "finished"), ("P", "pending")],
         "o_orderstatus string, status_label string",
     )

@@ -13,6 +13,7 @@ import tempfile
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def default_cpus() -> int:
@@ -169,6 +170,42 @@ def isolated_session(spark: SparkSession, **views: DataFrame) -> SparkSession:
             rebind(clone._jsparkSession, df._jdf.logicalPlan()), clone
         ).createOrReplaceTempView(name)
     return clone
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order),
+    shipped to the JVM as one Arrow table and planned as a
+    ``LocalRelation``.
+
+    ``createDataFrame`` over a Python list pickles the rows into a
+    ``PythonRDD``, so every action over the frame starts a Python worker
+    per slice (~1 s of worker CPU even for one row). This path starts
+    none and keeps every check the list path makes: a DDL string is
+    parsed the same way, each row goes through PySpark's own type
+    verifier (a ``None`` in a non-nullable field raises), and rows are
+    converted with ``schema.toInternal``, so a naive ``datetime`` keeps
+    its process-local-time meaning. The result keeps ``schema`` exactly,
+    nullability included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    verify = T._make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    internal = [schema.toInternal(row) for row in rows]
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in internal], type=f.type)
+            for i, f in enumerate(arrow)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_session(

@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import PipelineConfig
+from ..session import local_frame
 from .retry import call_with_retry
 
 Transport = Callable[[str, dict], str]
@@ -96,7 +97,7 @@ def fetch_payloads(
 def payloads_to_df(spark: SparkSession, results: list[FetchResult]) -> DataFrame:
     """Successful fetches as (symbol, payload) rows ready for parse_timeseries."""
     rows = [(r.symbol, r.payload) for r in results if r.payload is not None]
-    return spark.createDataFrame(rows, "symbol string, payload string")
+    return local_frame(spark, rows, "symbol string, payload string")
 
 
 def preflight(transport: Transport, config: PipelineConfig | None = None) -> bool:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.merge import merge_upsert_partitioned, merge_upsert_path
+from ..session import local_frame
 
 
 def stream_events(
@@ -400,7 +401,8 @@ def neardup_stream(
                     *prior
                 ).select("doc", *[f"mh{i}" for i in range(num_hashes)])
             else:
-                corpus_sig = spark.createDataFrame(
+                corpus_sig = local_frame(
+                    spark,
                     [],
                     "doc long, "
                     + ", ".join(f"mh{i} long" for i in range(num_hashes)),
@@ -504,8 +506,8 @@ def semantic_dedup_stream(
                     .select(id_col, "cluster_id", "u")
                 )
             else:
-                corpus = spark.createDataFrame(
-                    [], f"{id_col} long, cluster_id int, u array<double>"
+                corpus = local_frame(
+                    spark, [], f"{id_col} long, cluster_id int, u array<double>"
                 )
             pairs = semantic_pairs_against(b, corpus, threshold, id_col)
             pairs.write.mode("overwrite").parquet(

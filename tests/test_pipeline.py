@@ -124,3 +124,30 @@ def test_ingest_all_failed_is_guarded(spark, tmp_path):
     s = ingest(spark, ["AAPL"], boom, str(tmp_path / "t"), cfg)
     assert s.symbols_fetched == 0 and s.symbols_failed == 1
     assert not (tmp_path / "t").exists()
+
+
+def test_ingest_tick_builds_driver_frames_from_arrow(spark, tmp_path, monkeypatch):
+    """One tick with both operational tables builds every driver-side
+    frame (payloads, run log, fetch state) from a ``pyarrow.Table``,
+    never from a pickled Python list, so no Python worker starts."""
+    import pyarrow as pa
+    from pyspark.sql import SparkSession
+
+    seen = []
+    create = SparkSession.createDataFrame
+
+    def spy(self, data, *args, **kwargs):
+        seen.append(type(data))
+        return create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", spy)
+    cfg = PipelineConfig(api_key="k", request_delay_sec=0, max_retries=0)
+    tick = {"AAPL": _payload({"2024-01-05 15:00:00": _point("1", "2", "0.5", "1.5", "100")},
+                             "2024-01-05 15:00:00")}
+    s = ingest(spark, ["AAPL", "BAD"], _failing(lambda u, p: tick[p["symbol"]], {"BAD"}),
+               str(tmp_path / "t"), cfg, as_of="2024-01-05 15:30:00",
+               logs_path=str(tmp_path / "logs"), metadata_path=str(tmp_path / "meta"))
+    monkeypatch.undo()
+    assert s.rows_parsed == 1
+    assert len(seen) >= 3
+    assert all(t is pa.Table for t in seen), seen

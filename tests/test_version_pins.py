@@ -7,7 +7,9 @@ NormalizeFloatingNumbers' -0.0 canonicalization, ROLLUP-over-empty
 returning zero rows, sequence(1,0) descending, least/greatest NULL-skip,
 DuckDB 1.0's CTE-inlining/LEAST semantics, and the two py4j internals
 session.isolated_session is built on (``cloneSession`` and
-``classic.Dataset.ofRows``). A Spark or DuckDB
+``classic.Dataset.ofRows``), and the two session.local_frame is built on
+(``_make_type_verifier`` and ``createDataFrame(pyarrow.Table, StructType)``
+planning a ``LocalRelation``). A Spark or DuckDB
 upgrade that changes ANY of these would otherwise surface as dozens of
 scattered oracle failures; this file makes the upgrade fail in ONE
 place with a migration note per pin.
@@ -275,3 +277,46 @@ def test_dataset_ofrows_rebinds_a_persisted_frame_to_its_cache(spark):
         assert agg.sparkSession is clone
     finally:
         df.unpersist()
+
+
+def test_type_verifier_rejects_none_in_non_nullable_field():
+    """session.local_frame runs PySpark's private ``_make_type_verifier``
+    on every row, the check ``createDataFrame(list)`` makes; if it moves
+    or stops rejecting a None in a non-nullable field, local frames
+    silently accept rows the list path refuses."""
+    import pytest
+    from pyspark.sql import types as T
+    from pyspark.sql.types import _make_type_verifier
+
+    schema = T.StructType(
+        [T.StructField("k", T.StringType(), False), T.StructField("v", T.LongType())]
+    )
+    verify = _make_type_verifier(schema)
+    verify(("a", None))
+    with pytest.raises(ValueError, match="not nullable"):
+        verify((None, 1))
+
+
+def test_create_dataframe_from_arrow_table_keeps_schema_and_plans_local(spark):
+    """session.local_frame hands ``createDataFrame`` a ``pyarrow.Table``
+    with a StructType: the frame must keep that StructType exactly
+    (nullability included, not the Arrow table's own) and plan as a
+    ``LocalRelation``, with no Python RDD behind it."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("v", T.ArrayType(T.DoubleType(), False), True),
+        ]
+    )
+    table = pa.table({"k": ["a", "b"], "v": [[1.0, -0.0], None]})
+    df = spark.createDataFrame(table, schema)
+    assert df.schema == schema
+    assert _parse_datatype_json_string(df._jdf.schema().json()) == schema
+    qe = df._jdf.queryExecution()
+    assert qe.optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+    assert "PythonRDD" not in df._jdf.rdd().toDebugString()
+    assert df.collect()[0].v == [1.0, -0.0]
